@@ -616,14 +616,7 @@ def q37_avro_tokenize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # adopt the written container files (same keep-dir pattern as the
     # stream sinks) and return the LAZY distributed avro read instead
     # of a driver toPandas round trip of every row
-    import tempfile
-
-    keep = tempfile.mkdtemp(prefix="adt_stream_keep_")
-    if not _STREAM_KEEP:
-        import atexit
-
-        atexit.register(_cleanup_stream_keep)
-    _STREAM_KEEP.append(keep)
+    keep = _keep_dir()
     shutil.move(f"{base}/out", f"{keep}/out")
     result = read_avro(spark, f"{keep}/out")
     shutil.rmtree(base, ignore_errors=True)
@@ -852,6 +845,19 @@ def _cleanup_stream_keep() -> None:
     _STREAM_KEEP.clear()
 
 
+def _keep_dir() -> str:
+    """A fresh temp dir that outlives the query that fills it; every
+    keep dir is reaped at process exit."""
+    import atexit
+    import tempfile
+
+    keep = tempfile.mkdtemp(prefix="adt_stream_keep_")
+    if not _STREAM_KEEP:
+        atexit.register(_cleanup_stream_keep)
+    _STREAM_KEEP.append(keep)
+    return keep
+
+
 def _adopt_sink_output(spark: SparkSession, sink) -> DataFrame:
     """Move the sink's committed table OUT of the query's tempdir (one
     same-FS rename) and return the lazy committed-batches reader over
@@ -861,17 +867,11 @@ def _adopt_sink_output(spark: SparkSession, sink) -> DataFrame:
     (guide §5: the driver should do almost no data work) — measured
     0.3-1.5 s per streaming query at sf0.1. Moved dirs are reaped at
     process exit."""
-    import atexit
     import shutil
-    import tempfile
 
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
-    keep = tempfile.mkdtemp(prefix="adt_stream_keep_")
-    if not _STREAM_KEEP:
-        atexit.register(_cleanup_stream_keep)
-    _STREAM_KEEP.append(keep)
-    dest = os.path.join(keep, "table")
+    dest = os.path.join(_keep_dir(), "table")
     shutil.move(sink.table_path, dest)
     adopted = ExactlyOnceSink(
         dest,
@@ -2072,6 +2072,7 @@ def q82_stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded_keys,
         minhash_signatures,
     )
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import (
         IngestAdmissionPipeline,
     )
@@ -2110,7 +2111,7 @@ def q82_stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         st = st.repartition(spark.sparkContext.defaultParallelism)
         sink = ExactlyOnceSink(f"{base}/out")
         with IngestAdmissionPipeline(corpus_banded, ev, sink) as pipe:
-            pipe.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, pipe, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink).select(
             "doc_id", F.md5("text").alias("text_md5")
         )
@@ -2270,6 +2271,7 @@ def q93_stream_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from auto_data_tokenize_spark.operators.lines import (
         duplicated_window_hashes,
     )
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import BoilerplateGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -2286,7 +2288,7 @@ def q93_stream_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         with BoilerplateGate(
             census, sink, max_covered_frac=0.5, k=8
         ) as gate:
-            gate.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink).select(
             "doc_id", "n_tokens", "n_covered", "covered_frac"
         )
@@ -2375,6 +2377,7 @@ def q95_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_default_ratio_micro6,
         dsir_log_ratios,
     )
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import DsirGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -2404,7 +2407,7 @@ def q95_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_avg_ratio_micro6=-85000,
             n_buckets=4096,
         ) as gate:
-            gate.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink).select(
             "doc_id", "n_grams", "logw_micro6"
         )
@@ -2533,6 +2536,7 @@ def q87_stream_fluency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.lm import train_stupid_backoff
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import FluencyGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -2560,7 +2564,7 @@ def q87_stream_fluency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         st = st.repartition(spark.sparkContext.defaultParallelism)
         sink = ExactlyOnceSink(f"{base}/out")
         with FluencyGate(lm, sink, min_avg_logp=-7.0) as gate:
-            gate.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink).select(
             "doc_id", "n_tokens", "n_hit3", "n_hit2", "n_hit1", "avg_logp"
         )
@@ -2679,6 +2683,7 @@ def q98_stream_semantic_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import SemanticDedupGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -2698,7 +2703,7 @@ def q98_stream_semantic_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         with SemanticDedupGate(
             corpus, sink, threshold=0.9, nlist=16, nprobe=4, vec_col="v"
         ) as gate:
-            gate.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink).select("vec_id")
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -3312,6 +3317,7 @@ def q119_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import AsofEnrichGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -3343,7 +3349,7 @@ def q119_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         with AsofEnrichGate(
             dim, sink, on="user_id", right_cols=["tier"]
         ) as gate:
-            gate.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink)
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -3412,6 +3418,7 @@ def q101_stream_nb_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from auto_data_tokenize_spark.operators.quality_clf import train_nb
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import NbQualityGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -3430,7 +3437,7 @@ def q101_stream_nb_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         with NbQualityGate(
             model, sink, min_score_micro6=NB_GATE_MIN_SCORE_MICRO6
         ) as gate:
-            gate.run(st, f"{base}/ckpt")
+            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
         result = _adopt_sink_output(spark, sink).select(
             "doc_id", "n_tokens", "score_micro6"
         )

@@ -300,10 +300,6 @@ def ensure_sf(sf_name: str, data_root: str = DATA_ROOT, force: bool = False) -> 
     return out_dir
 
 
-def transcripts_path(sf_name: str, data_root: str = DATA_ROOT) -> str:
-    return os.path.join(ensure_sf(sf_name, data_root), "transcripts.parquet")
-
-
 # -- extended-detector fixture (PERSON_NAME + DATE_OF_BIRTH) ---------------
 #
 # The reference's transcript demo tokenizes PERSON_NAME, EMAIL_ADDRESS,

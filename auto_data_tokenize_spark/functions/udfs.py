@@ -25,7 +25,6 @@ else stays JVM-side (built-in ``pyspark.sql.functions``). Design rules:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -219,14 +218,3 @@ def info_types_udf(info_types: tuple[str, ...] | None = None):
         )
 
     return _info_types
-
-
-def with_tokenized_text(
-    df,
-    conv_col: str = "conv_id",
-    text_col: str = "text",
-    out_col: str = "text_tok",
-    root_key: bytes | None = None,
-):
-    """Plan helper: add the tokenized-text column (narrow, no shuffle)."""
-    return df.withColumn(out_col, tokenize_text_udf(root_key)(F.col(conv_col), F.col(text_col)))

@@ -353,7 +353,6 @@ class DecontaminationGate:
         id_col: str = "doc_id",
         text_col: str = "text",
         k: int = 5,
-        persist_eval: bool = True,
     ):
         from auto_data_tokenize_spark.operators.dedup import word_shingles
 
@@ -365,7 +364,7 @@ class DecontaminationGate:
             .select(F.explode_outer(F.array_distinct("_g")).alias("shingle"))
             .distinct()
         )
-        self._persisted = bool(persist_eval and not eval_df.isStreaming)
+        self._persisted = not eval_df.isStreaming
         if self._persisted:
             ev = ev.persist()
         self.eval_shingles = ev

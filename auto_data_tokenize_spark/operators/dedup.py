@@ -275,8 +275,8 @@ class NearDupGate:
 
     ``corpus_banded`` is the static banded-key table
     (:func:`banded_keys` over the corpus signatures — at real scale a
-    precomputed, bucketed table, in which case pass
-    ``persist_corpus=False`` and let the table format serve it).
+    precomputed, bucketed table). A batch band table is persisted for
+    the life of the gate; a streaming one is not.
     The corpus signatures MUST use the default ``affine32`` hash mode:
     the stream side computes affine32 only, and band keys from a
     different family never collide — the failure is silent zero recall,
@@ -300,8 +300,6 @@ class NearDupGate:
         n_hashes: int = 64,
         bands: int = 16,
         rows_per_band: int = 4,
-        persist_corpus: bool = True,
-        broadcast_corpus: bool = False,
     ):
         self.id_col = id_col
         self.text_col = text_col
@@ -310,17 +308,10 @@ class NearDupGate:
         self.bands = bands
         self.rows_per_band = rows_per_band
         corpus_keys = corpus_banded.select("band_idx", "band_key").distinct()
-        self._persisted = bool(persist_corpus and not corpus_banded.isStreaming)
+        self._persisted = not corpus_banded.isStreaming
         if self._persisted:
             corpus_keys = corpus_keys.persist()
-        # a continuous (non-foreachBatch) streaming plan has no AQE, so
-        # the semi join otherwise sort-merges BOTH sides every micro-
-        # batch; the hint ships the distinct band keys once per batch.
-        # Opt-in: a 100 TB corpus' band universe outgrows a broadcast —
-        # there the bucketed-index co-location path applies instead.
-        self.corpus_keys = (
-            F.broadcast(corpus_keys) if broadcast_corpus else corpus_keys
-        )
+        self.corpus_keys = corpus_keys
 
     def apply(self, incoming: DataFrame) -> DataFrame:
         parallelism = incoming.sparkSession.sparkContext.defaultParallelism
@@ -354,15 +345,12 @@ def near_dup_gate(
     n_hashes: int = 64,
     bands: int = 16,
     rows_per_band: int = 4,
-    persist_corpus: bool = True,
 ) -> DataFrame:
-    """One-shot functional form of :class:`NearDupGate`. NOTE: with
-    ``persist_corpus=True`` the pinned corpus band set lives until the
-    session ends — prefer the class (context manager) when the gate
-    has a bounded lifetime."""
+    """One-shot functional form of :class:`NearDupGate`. NOTE: a batch
+    corpus band set stays pinned until the session ends — prefer the
+    class (context manager) when the gate has a bounded lifetime."""
     return NearDupGate(
-        corpus_banded, id_col, text_col, k, n_hashes, bands, rows_per_band,
-        persist_corpus,
+        corpus_banded, id_col, text_col, k, n_hashes, bands, rows_per_band
     ).apply(incoming)
 
 
@@ -436,38 +424,6 @@ def lsh_candidate_pairs(
         .select("a", "b")
         .distinct()
     )
-
-
-def jaccard_verify(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Exact distinct-word-set Jaccard on candidate pairs only.
-    Output: (a, b, jaccard) for pairs ≥ threshold."""
-    words = df.select(
-        F.col(id_col).alias("_id"),
-        F.expr(f"array_distinct(split(trim(lower({text_col})), '\\\\s+'))").alias(
-            "_w"
-        ),
-    )
-    j = (
-        pairs.join(words.withColumnRenamed("_id", "a").withColumnRenamed("_w", "wa"), "a")
-        .join(words.withColumnRenamed("_id", "b").withColumnRenamed("_w", "wb"), "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("wa", "wb"))
-                / F.size(F.array_union("wa", "wb")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return j
 
 
 def minhash_dedup(
@@ -712,13 +668,15 @@ def _cc_driver(ed: DataFrame) -> DataFrame | None:
     per round and O(log n) rounds — pure fixed cost once the edge set
     fits in driver memory (guide §1.2: fix the distributed algorithm
     first; a bounded Arrow collect of an edge LIST is not corpus-sized
-    data). Returns None when an endpoint is NULL or an id dtype is not
-    a plain long/string (the iterative path's join-equality semantics
-    own those cases)."""
+    data). Returns None when an endpoint is NULL, the two endpoint
+    columns differ in dtype, or the id dtype is not a plain long/string
+    (the iterative path's join-equality semantics own those cases)."""
     from pyspark.sql.types import IntegerType, StringType
 
     t = ed.schema[0].dataType
-    if not isinstance(t, (LongType, IntegerType, StringType)):
+    if t != ed.schema[1].dataType or not isinstance(
+        t, (LongType, IntegerType, StringType)
+    ):
         return None
     pdf = ed.toPandas()
     if pdf.isna().any().any():
@@ -812,22 +770,23 @@ def connected_components(
     # replaces O(log n) pointer-jumping rounds (~4 jobs each) with one
     # bounded Arrow collect of the single-direction edge list —
     # measured 5.4 s -> 0.2 s on the sf0.1 near-dup graph. Above the
-    # gate (or NULL endpoints / exotic id dtypes) the iterative kernel
-    # below remains the scale path.
-    if ed.count() <= int(driver_max_edges):
-        direct = _cc_driver(ed)
-        if direct is not None:
-            return direct
-    sym = ed.unionAll(
-        ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
+    # gate (or NULL endpoints / mixed or exotic id dtypes) the iterative
+    # kernel below remains the scale path. Both paths leave through the
+    # same GC hint (see the finally below).
     try:
+        if ed.count() <= int(driver_max_edges):
+            direct = _cc_driver(ed)
+            if direct is not None:
+                return direct
+        sym = ed.unionAll(
+            ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        labels = (
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("id"))
+            .localCheckpoint(eager=True)
+        )
         for _ in range(max_iterations):
             nbr_min = (
                 sym.join(labels, sym["dst"] == labels["id"])

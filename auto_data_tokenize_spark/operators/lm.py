@@ -146,28 +146,19 @@ def score_stupid_backoff(
     lm: NGramLM,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = False,
 ) -> DataFrame:
     """Per-document Stupid Backoff fluency: (id, n_tokens, n_hit3,
     n_hit2, n_hit1, avg_logp). ``n_hitK`` counts positions resolved
     at order K (exact integers — the engine-independent signal);
     ``avg_logp`` is the rounded mean per-token ``ln S``. Positions 0
     and 1 start at the highest order their context allows with no
-    backoff penalty.
-
-    ``broadcast_model=True`` hints the five count-table joins to build
-    hash sides from the model tables instead of shuffling the position
-    grams five times — right whenever the (count-pruned) tables fit
-    executor memory; leave False for an unpruned web-scale trigram
-    table and let size estimates decide (guide §3.1)."""
+    backoff penalty."""
     pos = _position_grams(docs, id_col, text_col)
 
     def j(df: DataFrame, table: DataFrame, key: str, out: str) -> DataFrame:
         t = table.select(
             F.col("gram").alias(f"_{out}_g"), F.col("cnt").alias(out)
         )
-        if broadcast_model:
-            t = F.broadcast(t)
         return df.join(
             t, F.col(key) == F.col(f"_{out}_g"), "left"
         ).drop(f"_{out}_g")

@@ -122,13 +122,6 @@ def write_schema_file(
     return p
 
 
-def write_errors(bad: DataFrame, report_dir: str) -> str:
-    """Error rows under <report>/error (DlpInspectionPipeline.java:142-161)."""
-    p = os.path.join(report_dir, "error")
-    bad.write.mode("overwrite").json(p)
-    return p
-
-
 def findings_to_column_infos(
     findings: list[dict], flat_key_schema: dict[str, str] | None = None
 ) -> list[dict]:

@@ -113,25 +113,6 @@ def _plane_matrix(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return signs
 
 
-def lsh_signature_udf(n_planes: int, dim: int, seed: int = 42):
-    planes = _plane_matrix(n_planes, dim, seed)  # small; ships in closure
-
-    @pandas_udf(LongType())
-    def _sig(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        m = np.array(
-            [np.asarray(v, dtype=np.float64) for v in vecs]
-        )  # (n, dim) one Arrow batch
-        proj = m @ planes.T  # (n, planes)
-        bits = (proj > 0).astype(np.uint64)
-        weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
-        sig = (bits * weights).sum(axis=1).astype(np.int64)
-        return pd.Series(sig, index=vecs.index)
-
-    return _sig
-
-
 def lsh_signatures_udf(n_planes: int, dim: int, n_tables: int, seed: int = 42):
     """All ``n_tables`` hyperplane signatures in ONE Arrow pass
     (one matmul against the stacked (n_tables·n_planes, dim) plane

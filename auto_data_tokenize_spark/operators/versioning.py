@@ -145,7 +145,6 @@ class SnapshotDeltaGate:
         old: DataFrame,
         content_cols: list[str],
         id_col: str = "doc_id",
-        persist_old: bool = True,
     ):
         if old.isStreaming:
             # fail fast with the real contract: apply() would build a
@@ -158,14 +157,10 @@ class SnapshotDeltaGate:
             )
         self.content_cols = list(content_cols)
         self.id_col = id_col
-        o = old.select(
+        self.old_hashes = old.select(
             F.col(id_col),
             snapshot_hash_expr(self.content_cols).alias("old_hash"),
-        )
-        self._persisted = bool(persist_old)
-        if self._persisted:
-            o = o.persist()
-        self.old_hashes = o
+        ).persist()
 
     def apply(self, incoming: DataFrame) -> DataFrame:
         s = incoming.withColumn(
@@ -185,8 +180,7 @@ class SnapshotDeltaGate:
         return self
 
     def __exit__(self, *exc) -> None:
-        if self._persisted:
-            self.old_hashes.unpersist()
+        self.old_hashes.unpersist()
 
 
 def incremental_band_index(

@@ -24,7 +24,7 @@ Notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -48,8 +48,4 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(key)
     writer.format("parquet").saveAsTable(table)
-    return spark.table(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)

@@ -21,6 +21,9 @@ projection + a semi-join against the corpus band table (bucket the
 corpus table at real scale so this join co-locates); eval shingles are
 megabytes and broadcast. Nothing aggregates over more than one
 micro-batch — no state store, no watermark.
+
+Every static-table gate here is an :class:`AdmissionGate`: pass it as
+the ``sink`` of ``pipeline.run_to_sink``, the one stream runner.
 """
 
 from __future__ import annotations
@@ -30,7 +33,44 @@ from pyspark.sql import DataFrame, functions as F
 from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
 
-class FluencyGate:
+class AdmissionGate:
+    """Base of the static-table gates below. A gate is the ``sink``
+    argument of :func:`~auto_data_tokenize_spark.streaming.pipeline.run_to_sink`:
+    each micro-batch goes through ``admit`` and the admitted rows into
+    the gate's exactly-once sink. Use it as a context manager (or call
+    :meth:`close`) so the static tables it persisted are released when
+    the gate retires.
+
+        with DsirGate(ratios, default, sink, min_avg_ratio_micro6=m) as g:
+            run_to_sink(stream_df, g, ckpt)
+    """
+
+    sink: ExactlyOnceSink
+    _persisted: tuple[DataFrame, ...] = ()
+
+    def _persist(self, *tables: DataFrame) -> None:
+        self._persisted = tables
+        for t in tables:
+            t.persist()
+
+    def admit(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        self.sink.foreach_batch(self.admit(batch_df), batch_id)
+
+    def close(self) -> None:
+        for t in self._persisted:
+            t.unpersist()
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+class FluencyGate(AdmissionGate):
     """Streaming LM fluency gate (the continuous form of the
     CCNet-style perplexity filter, ``operators/lm.py``): each
     micro-batch is scored against a STATIC Stupid Backoff model —
@@ -54,20 +94,13 @@ class FluencyGate:
         min_avg_logp: float,
         id_col: str = "doc_id",
         text_col: str = "text",
-        broadcast_model: bool = False,
     ):
         self.lm = lm
         self.sink = sink
         self.min_avg_logp = float(min_avg_logp)
         self.id_col = id_col
         self.text_col = text_col
-        # off by default: foreachBatch batch jobs run with AQE, which
-        # already picks broadcast builds from the persisted tables'
-        # REAL sizes (ABAB-measured neutral at sf0.1); the knob exists
-        # for continuous plans or misestimated tables
-        self.broadcast_model = bool(broadcast_model)
-        for t in (lm.uni, lm.bi, lm.tri, lm.total):
-            t.persist()
+        self._persist(lm.uni, lm.bi, lm.tri, lm.total)
 
     def admit(self, batch_df: DataFrame) -> DataFrame:
         from auto_data_tokenize_spark.operators.lm import (
@@ -75,56 +108,22 @@ class FluencyGate:
         )
 
         scored = score_stupid_backoff(
-            batch_df,
-            self.lm,
-            self.id_col,
-            self.text_col,
-            broadcast_model=self.broadcast_model,
+            batch_df, self.lm, self.id_col, self.text_col
         )
         return scored.filter(
             F.col("avg_logp") >= F.lit(self.min_avg_logp)
         )
 
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.sink.foreach_batch(self.admit(batch_df), batch_id)
 
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-fluency",
-    ) -> None:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
-    def close(self) -> None:
-        for t in (self.lm.uni, self.lm.bi, self.lm.tri, self.lm.total):
-            t.unpersist()
-
-    def __enter__(self) -> "FluencyGate":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-
-class IngestAdmissionPipeline:
-    """Context-managed composition of the three ingest gates in front
-    of an :class:`ExactlyOnceSink`. ``corpus_banded`` is the static
+class IngestAdmissionPipeline(AdmissionGate):
+    """Composition of the three ingest gates in front of an
+    :class:`ExactlyOnceSink`. ``corpus_banded`` is the static
     banded-key table (``dedup.banded_keys`` over the existing corpus —
     maintained continuously by the q78-style upsert index at real
-    scale); ``eval_df`` is the held-out eval suite (doc_id, text)."""
+    scale); ``eval_df`` is the held-out eval suite (doc_id, text).
+    Like every gate here it runs through ``pipeline.run_to_sink``; its
+    own ``foreach_batch`` also releases the micro-batch's cached
+    intermediates once the sink write is done."""
 
     def __init__(
         self,
@@ -142,15 +141,15 @@ class IngestAdmissionPipeline:
         self.k = k
         self.sink = sink
         self._batch_cache: list[DataFrame] = []
-        self.corpus_keys = (
-            corpus_banded.select("band_idx", "band_key").distinct().persist()
-        )
+        self.corpus_keys = corpus_banded.select(
+            "band_idx", "band_key"
+        ).distinct()
         self.eval_shingles = (
             word_shingles(eval_df, text_col, k, out_col="_g")
             .select(F.explode_outer(F.array_distinct("_g")).alias("_s"))
             .distinct()
-            .persist()
         )
+        self._persist(self.corpus_keys, self.eval_shingles)
 
     def admit(self, batch_df: DataFrame) -> DataFrame:
         """The gate chain over one (batch) DataFrame; returns the
@@ -212,42 +211,12 @@ class IngestAdmissionPipeline:
         finally:
             self._release_batch_cache()
 
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-ingest",
-    ) -> None:
-        """Drain everything available through the gate chain into the
-        sink (availableNow semantics, same contract as
-        ``pipeline.run_to_sink``)."""
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
     def close(self) -> None:
         self._release_batch_cache()
-        self.corpus_keys.unpersist()
-        self.eval_shingles.unpersist()
-
-    def __enter__(self) -> "IngestAdmissionPipeline":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+        super().close()
 
 
-class DsirGate:
+class DsirGate(AdmissionGate):
     """Streaming DSIR admission gate (the continuous form of
     ``operators/dsir.py``): each arriving document is scored against
     a STATIC hashed-n-gram importance ratio table (built once from a
@@ -277,7 +246,8 @@ class DsirGate:
         id_col: str = "doc_id",
         text_col: str = "text",
     ):
-        self.ratios = ratios.select("bucket", "ratio_micro6").persist()
+        self.ratios = ratios.select("bucket", "ratio_micro6")
+        self._persist(self.ratios)
         self.default_ratio_micro6 = int(default_ratio_micro6)
         self.sink = sink
         self.min_avg_ratio_micro6 = int(min_avg_ratio_micro6)
@@ -309,40 +279,8 @@ class DsirGate:
             )
         )
 
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.sink.foreach_batch(self.admit(batch_df), batch_id)
 
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-dsir",
-    ) -> None:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
-    def close(self) -> None:
-        self.ratios.unpersist()
-
-    def __enter__(self) -> "DsirGate":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-
-class BoilerplateGate:
+class BoilerplateGate(AdmissionGate):
     """Streaming boilerplate-span admission gate (the continuous form
     of :func:`operators.lines.remove_duplicated_spans`'s census): each
     arriving document is scored for the fraction of its tokens covered
@@ -381,7 +319,8 @@ class BoilerplateGate:
             )
         if k < 2:
             raise ValueError(f"k must be >= 2, got {k}")
-        self.census = census.select("window_hash").persist()
+        self.census = census.select("window_hash")
+        self._persist(self.census)
         self.sink = sink
         self.max_covered_frac = float(max_covered_frac)
         self.k = k
@@ -408,40 +347,8 @@ class BoilerplateGate:
             )
         )
 
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.sink.foreach_batch(self.admit(batch_df), batch_id)
 
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-boilerplate",
-    ) -> None:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
-    def close(self) -> None:
-        self.census.unpersist()
-
-    def __enter__(self) -> "BoilerplateGate":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-
-class SemanticDedupGate:
+class SemanticDedupGate(AdmissionGate):
     """Streaming semantic-dedup admission gate (the continuous form of
     ``similarity.semantic_dedup``): each arriving embedding is probed
     against the FROZEN k-means centroids of the existing corpus, joined
@@ -490,10 +397,11 @@ class SemanticDedupGate:
             corpus, nlist, nprobe, iters, id_col, vec_col, seed
         )
         self.cents = cents
-        self.corpus_cells = cells.withColumnRenamed(id_col, "_cid").persist()
+        self.corpus_cells = cells.withColumnRenamed(id_col, "_cid")
         self.corpus_vecs = corpus.select(
             F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
-        ).persist()
+        )
+        self._persist(self.corpus_cells, self.corpus_vecs)
 
     def admit(self, batch_df: DataFrame) -> DataFrame:
         from auto_data_tokenize_spark.operators.similarity import (
@@ -535,41 +443,8 @@ class SemanticDedupGate:
         )
         return batch_df.join(dup_ids, self.id_col, "left_anti")
 
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.sink.foreach_batch(self.admit(batch_df), batch_id)
 
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-semdedup",
-    ) -> None:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
-    def close(self) -> None:
-        self.corpus_cells.unpersist()
-        self.corpus_vecs.unpersist()
-
-    def __enter__(self) -> "SemanticDedupGate":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-
-class NbQualityGate:
+class NbQualityGate(AdmissionGate):
     """Streaming quality-classifier admission gate (the continuous
     form of ``operators/quality_clf.py``): each arriving document is
     scored against a STATIC Naive-Bayes model — the ratio table is
@@ -596,8 +471,7 @@ class NbQualityGate:
         self.min_score_micro6 = int(min_score_micro6)
         self.id_col = id_col
         self.text_col = text_col
-        model.ratios.persist()
-        model.defaults.persist()
+        self._persist(model.ratios, model.defaults)
 
     def admit(self, batch_df: DataFrame) -> DataFrame:
         from auto_data_tokenize_spark.operators.quality_clf import (
@@ -613,39 +487,9 @@ class NbQualityGate:
             .select(self.id_col, self.text_col, "n_tokens", "score_micro6")
         )
 
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.sink.foreach_batch(self.admit(batch_df), batch_id)
-
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-nb-quality",
-    ) -> None:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
     def close(self) -> None:
-        self.model.ratios.unpersist()
-        self.model.defaults.unpersist()
+        super().close()
         self.model.unpersist()
-
-    def __enter__(self) -> "NbQualityGate":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
 
 
 def source_quota_stream(
@@ -827,7 +671,7 @@ def stratified_reservoir_stream(
     )
 
 
-class AsofEnrichGate:
+class AsofEnrichGate(AdmissionGate):
     """Streaming SCD2-style dimension enrichment: each arriving event
     is joined to the LATEST version of a static versioned dimension
     at-or-before its event time (``operators.asof.asof_join`` per
@@ -836,7 +680,7 @@ class AsofEnrichGate:
     the same structural reason as the admission pipeline above).
 
         with AsofEnrichGate(dim, sink, on="user_id", right_ts="vts") as g:
-            g.run(event_stream, ckpt)
+            run_to_sink(event_stream, g, ckpt)
 
     The enrichment is a deterministic function of batch content and
     the persisted dimension, so a redelivered batch re-derives
@@ -875,9 +719,10 @@ class AsofEnrichGate:
         self.right_cols = right_cols
         self.how = how
         self.right_tiebreak = right_tiebreak
-        self.dim = dim.persist()
+        self.dim = dim
+        self._persist(dim)
 
-    def enrich(self, batch_df: DataFrame) -> DataFrame:
+    def admit(self, batch_df: DataFrame) -> DataFrame:
         from auto_data_tokenize_spark.operators.asof import asof_join
 
         return asof_join(
@@ -890,32 +735,3 @@ class AsofEnrichGate:
             how=self.how,
             right_tiebreak=self.right_tiebreak,
         )
-
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.sink.foreach_batch(self.enrich(batch_df), batch_id)
-
-    def run(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "adt-asof-enrich",
-    ) -> None:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.foreach_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
-    def __enter__(self) -> "AsofEnrichGate":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.dim.unpersist()

@@ -6,13 +6,19 @@
                               ├─► detections ──► session reports (conv_id)
                               └─► detections ⋈ token-dictionary stream
 
-Each runner takes explicit checkpoint + output locations so tests can
-kill and resume. All runners default to ``availableNow`` semantics via
-``process_all`` (drain the source, then stop) — production would leave
-the query running with a processingTime trigger.
+``run_to_sink`` is the one runner: every ``foreachBatch`` query in the
+package starts there, whether its sink is an ``ExactlyOnceSink`` or a
+static-table gate from ``streaming/ingest.py``. It takes explicit
+checkpoint + output locations so tests can kill and resume, drains
+everything available and stops (production would leave the query
+running with a processingTime trigger), and returns the query's
+progress records (``durationMs`` by phase, ``numInputRows``, each
+state operator's commit time and size, one dict per micro-batch).
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -22,18 +28,26 @@ from auto_data_tokenize_spark.operators.windows import (
     infotype_frequencies,
     session_reports,
 )
+from auto_data_tokenize_spark.streaming.ingest import AdmissionGate
 from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
 
 def run_to_sink(
     stream_df: DataFrame,
-    sink: ExactlyOnceSink,
+    sink: ExactlyOnceSink | AdmissionGate,
     checkpoint_dir: str,
     output_mode: str = "append",
     query_name: str = "adt",
     shuffle_partitions: int | None = None,
-) -> None:
-    """Start the query, drain everything available, stop.
+) -> list[dict]:
+    """Start the query, drain everything available, stop; return the
+    query's ``recentProgress`` records as plain dicts (read before
+    ``stop``), one per micro-batch (the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` of them, 100 by
+    default). A failure inside a micro-batch
+    propagates as Spark's ``StreamingQueryException`` carrying the
+    original message. ``sink`` is anything with
+    ``foreach_batch(df, batch_id)``.
 
     ``shuffle_partitions`` sizes the STATE partition count for stateful
     queries (set at first planning, sticky in the checkpoint). State
@@ -61,6 +75,7 @@ def run_to_sink(
         try:
             q.processAllAvailable()
         finally:
+            progress = [json.loads(p.json) for p in q.recentProgress]
             q.stop()
     finally:
         if old is not None:
@@ -68,6 +83,7 @@ def run_to_sink(
     # surface async failures (e.g. a UDF error inside a micro-batch)
     if q.exception() is not None:
         raise RuntimeError(str(q.exception()))
+    return progress
 
 
 def tokenize_stream(

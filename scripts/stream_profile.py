@@ -1,11 +1,11 @@
-"""Per-micro-batch duration breakdown for the streaming queries
-(round-6 measurement tooling; guide §1.1 empirical loop).
+"""Per-micro-batch duration breakdown for the streaming queries.
 
-Monkeypatches ``pipeline.run_to_sink`` and the gate ``run`` methods to
-capture ``StreamingQuery.recentProgress`` after the drain, then runs
-the named queries once and prints each micro-batch's ``durationMs``
-(addBatch / getBatch / queryPlanning / walCommit / commitOffsets /
-stateOperators commit times).
+Runs the named queries once and prints, for each micro-batch, its
+``durationMs`` by phase (addBatch / getBatch / queryPlanning /
+walCommit / commitOffsets) and each state operator's ``commitTimeMs``,
+taken from the progress records that ``pipeline.run_to_sink`` (the
+one stream runner, ingest gates included) returns. A thin wrapper
+around ``run_to_sink`` collects the records of every query it runs.
 
 Usage: python scripts/stream_profile.py q129_stream_dup_rate ...
 """
@@ -26,27 +26,26 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CAPTURED: list[dict] = []
 
 
-def _capture(q) -> None:
-    for p in q.recentProgress:
-        CAPTURED.append(
+def _summary(p: dict) -> dict:
+    """One micro-batch's phase split from a ``run_to_sink`` progress
+    record."""
+    return {
+        "batchId": p["batchId"],
+        "numInputRows": p.get("numInputRows"),
+        "durationMs": p.get("durationMs"),
+        "stateOperators": [
             {
-                "batchId": p["batchId"],
-                "numInputRows": p.get("numInputRows"),
-                "durationMs": p.get("durationMs"),
-                "stateOperators": [
-                    {
-                        k: s.get(k)
-                        for k in (
-                            "operatorName",
-                            "commitTimeMs",
-                            "numRowsTotal",
-                            "numPartitions" if "numPartitions" in s else "numRowsUpdated",
-                        )
-                    }
-                    for s in p.get("stateOperators", [])
-                ],
+                k: s.get(k)
+                for k in (
+                    "operatorName",
+                    "commitTimeMs",
+                    "numRowsTotal",
+                    "numPartitions" if "numPartitions" in s else "numRowsUpdated",
+                )
             }
-        )
+            for s in p.get("stateOperators", [])
+        ],
+    }
 
 
 def main() -> None:
@@ -55,69 +54,16 @@ def main() -> None:
     from auto_data_tokenize_spark.session import get_spark
     from auto_data_tokenize_spark.streaming import pipeline
 
-    # patch run_to_sink
-    orig = pipeline.run_to_sink
+    # every stream query (gates included) runs through run_to_sink,
+    # which returns its progress records: record them per query
+    run_to_sink = pipeline.run_to_sink
 
-    def patched(stream_df, sink, checkpoint_dir, output_mode="append",
-                query_name="adt", shuffle_partitions=None):
-        spark = stream_df.sparkSession
-        old = None
-        if shuffle_partitions is not None:
-            old = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        try:
-            q = (
-                stream_df.writeStream.outputMode(output_mode)
-                .queryName(query_name)
-                .option("checkpointLocation", checkpoint_dir)
-                .foreachBatch(sink.foreach_batch)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                _capture(q)
-                q.stop()
-        finally:
-            if old is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", old)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+    def recording(*args, **kwargs):
+        progress = run_to_sink(*args, **kwargs)
+        CAPTURED.extend(_summary(p) for p in progress)
+        return progress
 
-    pipeline.run_to_sink = patched
-
-    # patch the gate run() methods (they start their own queries)
-    from auto_data_tokenize_spark.streaming import ingest
-
-    def make_gate_run(cls):
-        def run(self, stream_df, checkpoint_dir, query_name="adt-gate"):
-            q = (
-                stream_df.writeStream.outputMode("append")
-                .queryName(query_name)
-                .option("checkpointLocation", checkpoint_dir)
-                .foreachBatch(self.foreach_batch)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                _capture(q)
-                q.stop()
-            if q.exception() is not None:
-                raise RuntimeError(str(q.exception()))
-        return run
-
-    for cls_name in (
-        "FluencyGate",
-        "IngestAdmissionPipeline",
-        "DsirGate",
-        "BoilerplateGate",
-        "SemanticDedupGate",
-        "NbQualityGate",
-        "AsofEnrichGate",
-    ):
-        cls = getattr(ingest, cls_name)
-        cls.run = make_gate_run(cls)
+    pipeline.run_to_sink = recording
 
     qs = em.queries()
     spark = get_spark("adt-stream-profile", cores=CPUS, shuffle_partitions=CPUS)

@@ -324,6 +324,22 @@ def test_connected_components_kernels_agree_on_string_ids(spark):
     )
 
 
+def test_connected_components_mixed_id_dtypes_take_iterative_path(spark):
+    """Edges whose endpoint columns differ in dtype (long vs string)
+    leave the driver union-find to the iterative kernel: the default
+    call returns the same rows as ``driver_max_edges=0`` instead of
+    failing on a long/str comparison."""
+    edges = spark.createDataFrame(
+        [(1, "2"), (2, "3"), (10, "11")], "a long, b string"
+    )
+    fast = dedup.connected_components(edges)
+    slow = dedup.connected_components(edges, driver_max_edges=0)
+    assert fast.schema == slow.schema
+    got = sorted(map(tuple, fast.collect()))
+    assert got == sorted(map(tuple, slow.collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
+
+
 def test_dup_clusters_groups_transitively(spark):
     """BASE ≈ NEAR ≈ NEAR2 chain → one cluster labeled with the min
     doc_id; singletons keep their own ids."""

@@ -218,6 +218,7 @@ def test_stream_semantic_gate_matches_batch(spark, tmp_path):
     twin: rejected arrivals are exactly those with a corpus near-dup."""
     import numpy as np
 
+    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import SemanticDedupGate
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
@@ -254,7 +255,7 @@ def test_stream_semantic_gate_matches_batch(spark, tmp_path):
     with SemanticDedupGate(
         corpus_df, sink, threshold=0.99, nlist=8, nprobe=4
     ) as gate:
-        gate.run(st, str(tmp_path / "ckpt"))
+        pipeline.run_to_sink(st, gate, str(tmp_path / "ckpt"))
     got = sorted(
         r["vec_id"] for r in sink.read_committed(spark).collect()
     )

@@ -919,7 +919,7 @@ def test_ingest_admission_pipeline_resume_no_dupes(spark, tmp_path):
             .parquet(in_dir)
         )
         with IngestAdmissionPipeline(banded, ev, sink) as pipe:
-            pipe.run(st, ckpt)
+            pipeline.run_to_sink(st, pipe, ckpt)
 
     run()
     mid = {r["doc_id"] for r in sink.read_committed(spark).collect()}
@@ -973,7 +973,7 @@ def test_fluency_gate_resume_no_dupes(spark, tmp_path):
         # tokens the unseen half-count floor is ln(0.5/72) ~ -5, far
         # higher than at corpus scale) for this tiny model
         with FluencyGate(lm, sink, min_avg_logp=-3.0) as gate:
-            gate.run(st, ckpt)
+            pipeline.run_to_sink(st, gate, ckpt)
 
     run()
     mid = {r["doc_id"] for r in sink.read_committed(spark).collect()}
@@ -1034,7 +1034,7 @@ def test_boilerplate_gate_resume_no_dupes(spark, tmp_path):
         with BoilerplateGate(
             census, sink, max_covered_frac=0.5, k=4
         ) as gate:
-            gate.run(st, ckpt)
+            pipeline.run_to_sink(st, gate, ckpt)
 
     run()
     mid = {r["doc_id"] for r in sink.read_committed(spark).collect()}
@@ -1106,7 +1106,7 @@ def test_dsir_gate_resume_no_dupes(spark, tmp_path):
         with DsirGate(
             ratios, default, sink, min_avg_ratio_micro6=0, n_buckets=64
         ) as gate:
-            gate.run(st, ckpt)
+            pipeline.run_to_sink(st, gate, ckpt)
 
     run()
     mid = {r["doc_id"] for r in sink.read_committed(spark).collect()}
@@ -1119,6 +1119,107 @@ def test_dsir_gate_resume_no_dupes(spark, tmp_path):
     assert len(rows_out) == len(ids)
     # target-like docs carry a strictly positive integer weight
     assert all(r["logw_micro6"] > 0 and r["n_grams"] == 7 for r in rows_out)
+
+
+def test_nb_quality_gate_admits_what_batch_score_keeps(spark, tmp_path):
+    """Streaming Naive-Bayes gate (q101 shape) through ``run_to_sink``:
+    the admitted ids are exactly the ids a batch ``score_nb`` filter
+    keeps at the same threshold, the runner returns one progress
+    record per micro-batch, and leaving the gate releases the model
+    tables it persisted."""
+    import pandas as _pd
+
+    from auto_data_tokenize_spark.operators.quality_clf import (
+        score_nb,
+        train_nb,
+    )
+    from auto_data_tokenize_spark.streaming.ingest import NbQualityGate
+
+    labeled = spark.createDataFrame(
+        [
+            (i, "the quick brown fox reads good clean prose", True)
+            if i % 2 == 0
+            else (i, "click here buy now spam spam casino offer", False)
+            for i in range(40)
+        ],
+        "doc_id long, text string, label boolean",
+    )
+    model = train_nb(labeled)
+
+    texts = [
+        "good clean prose about the brown fox",
+        "buy now casino offer click here",
+        "the fox reads spam",
+        "clean prose click here",
+        "words the model never saw",
+    ]
+    rows = [(1000 + i, texts[i % len(texts)]) for i in range(20)]
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    pdf = _pd.DataFrame(rows, columns=["doc_id", "text"])
+    for k in range(2):
+        p = f"{in_dir}/part-{k}.parquet"
+        pdf.iloc[k * 10 : (k + 1) * 10].to_parquet(p, index=False)
+        os.utime(p, (1000 + k, 1000 + k))
+    st = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    sink = ExactlyOnceSink(str(tmp_path / "out"))
+    with NbQualityGate(model, sink, min_score_micro6=0) as gate:
+        progress = pipeline.run_to_sink(st, gate, str(tmp_path / "ckpt"))
+        assert model.ratios.is_cached and model.defaults.is_cached
+    assert not model.ratios.is_cached and not model.defaults.is_cached
+
+    got = [r["doc_id"] for r in sink.read_committed(spark).collect()]
+    batch = spark.createDataFrame(pdf)
+    want = {
+        r["doc_id"]
+        for r in score_nb(batch, model).collect()
+        if r["score_micro6"] >= 0
+    }
+    assert sorted(got) == sorted(want)
+    assert 0 < len(want) < len(rows)
+    data_batches = [p for p in progress if p["numInputRows"] > 0]
+    assert [p["batchId"] for p in data_batches] == [0, 1]
+    assert all("addBatch" in p["durationMs"] for p in data_batches)
+
+
+def test_run_to_sink_gate_failure_raises_and_restores_conf(spark, tmp_path):
+    """A gate whose ``admit`` raises inside a micro-batch: the runner
+    re-raises with the original message, the sink commits no batch,
+    and the per-query shuffle-partition setting does not leak into
+    the session."""
+    import pytest as _pytest
+    from pyspark.errors import StreamingQueryException
+
+    from auto_data_tokenize_spark.streaming.ingest import AdmissionGate
+
+    class FailingGate(AdmissionGate):
+        def __init__(self, sink):
+            self.sink = sink
+
+        def admit(self, batch_df):
+            raise ValueError("admit failed on purpose")
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    pd.DataFrame({"doc_id": [1, 2], "text": ["a b", "c d"]}).to_parquet(
+        f"{in_dir}/a.parquet", index=False
+    )
+    st = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
+    sink = ExactlyOnceSink(str(tmp_path / "out"))
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with FailingGate(sink) as gate:
+        with _pytest.raises(
+            StreamingQueryException, match="admit failed on purpose"
+        ):
+            pipeline.run_to_sink(
+                st, gate, str(tmp_path / "ckpt"), shuffle_partitions=3
+            )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert sink.committed_batches() == []
 
 
 def test_stage_stream_input_clears_stale_chunks(spark, tmp_path):
@@ -1607,7 +1708,7 @@ def test_asof_enrich_gate_matches_batch_and_rejects_streaming_dim(spark, tmp_pat
     )
     sink = ExactlyOnceSink(str(tmp_path / "out"))
     with AsofEnrichGate(dim, sink, on="user_id", right_cols=["tier"]) as gate:
-        gate.run(st, str(tmp_path / "ckpt"))
+        pipeline.run_to_sink(st, gate, str(tmp_path / "ckpt"))
     got = {
         (r["event_id"], r["vts_asof"], r["tier_asof"])
         for r in sink.read_committed(spark).collect()
