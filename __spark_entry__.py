@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -380,76 +381,53 @@ def q21_infotype_freq_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_stream_query(spark: SparkSession, sf_dir: str, mode: str):
-    """Single-trigger streaming run through the exactly-once sink; the
-    result is read back from committed batches. Single trigger ⇒ the
-    initial watermark is -inf, so no in-batch drops; append-mode output
-    is governed by the FINAL watermark = max(event ts) - delay, which
-    the oracle reproduces in SQL."""
-    import shutil
-    import tempfile
-
+def _staged_transcripts(case, sf_dir: str) -> DataFrame:
+    """The transcripts fixture staged as 8 ts-ordered files under the
+    case dir, read back as one single-trigger stream. Single trigger ⇒
+    the initial watermark is -inf, so no in-batch drops; append-mode
+    output is governed by the FINAL watermark = max(event ts) - delay,
+    which the oracles reproduce in SQL."""
     from auto_data_tokenize_spark import datagen
-    from auto_data_tokenize_spark.streaming import pipeline, source
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
+    from auto_data_tokenize_spark.streaming import source
 
     d = datagen.ensure_sf(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix=f"adt_stream_q_{mode}_")
     staged = source.stage_stream_input(
-        os.path.join(d, "transcripts.parquet"), f"{base}/in", n_files=8
+        os.path.join(d, "transcripts.parquet"),
+        os.path.join(case.dir, "in"),
+        n_files=8,
     )
-    st = source.transcripts_stream(spark, staged)
-    state_parts = None
-    if mode == "tokenize":
-        # no repartition here, measured deliberately: AES-SIV spans are
-        # cheap enough that the exchange costs more than it buys
-        # (3.6 s → 5.1 s warm at sf0.1), unlike the FF1 branch below
-        stream_df = pipeline.tokenize_stream(st)
-    elif mode == "fpe":
-        # 8 staged files = 8 scan partitions; the per-span FF1 crypto
-        # must fan out across all cores (stateless stream repartition —
-        # moving raw text once is cheap vs the Feistel rounds)
-        stream_df = pipeline.deidentify_stream(
-            st.repartition(spark.sparkContext.defaultParallelism),
-            {
-                "cryptoReplaceFfxFpeConfig": {
-                    "radix": 95,
-                    "surrogateInfoType": {"name": "ADT_TOKEN"},
-                }
-            },
-        )
-    elif mode == "dedup":
-        stream_df = pipeline.dedup_stream(st, window="1 hour", watermark="10 minutes")
-        state_parts = 8  # small-state single trigger: see run_to_sink
-    else:
-        stream_df = pipeline.session_report_stream(
-            st, gap="30 minutes", watermark="10 minutes"
-        )
-        state_parts = 8
-    sink = ExactlyOnceSink(f"{base}/out")
-    pipeline.run_to_sink(
-        stream_df, sink, f"{base}/ckpt", shuffle_partitions=state_parts
-    )
-    # adopt the committed files before the tmp dir disappears
-    result = _adopt_sink_output(spark, sink)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    return source.transcripts_stream(case.spark, staged)
 
 
 def q22_stream_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch golden, reproduced through Structured Streaming +
     the exactly-once sink (north_rule: same rows for the same input
     stream + watermark)."""
-    return _run_stream_query(spark, sf_dir, "tokenize").select(
-        "conv_id", "turn_idx", "text_tok"
-    )
+    from auto_data_tokenize_spark.streaming import pipeline
+
+    with _stream_case(spark, "q22") as case:
+        # no repartition here, measured deliberately: AES-SIV spans are
+        # cheap enough that the exchange costs more than it buys
+        # (3.6 s → 5.1 s warm at sf0.1), unlike q77's FF1 stream
+        tok = pipeline.tokenize_stream(_staged_transcripts(case, sf_dir))
+        return case.run(tok).select("conv_id", "turn_idx", "text_tok")
 
 
 def q23_stream_session_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-closed session reports from the state store (append
     mode emits sessions with session_end <= max(ts) - delay, verified
     empirically; the oracle applies the same filter in SQL)."""
-    return _run_stream_query(spark, sf_dir, "sessions").select(
+    from auto_data_tokenize_spark.streaming import pipeline
+
+    with _stream_case(spark, "q23") as case:
+        sessions = pipeline.session_report_stream(
+            _staged_transcripts(case, sf_dir),
+            gap="30 minutes",
+            watermark="10 minutes",
+        )
+        # small-state single trigger: see run_to_sink
+        result = case.run(sessions, shuffle_partitions=8)
+    return result.select(
         "conv_id", "session_start", "session_end", "n_detections", "n_info_types"
     )
 
@@ -459,7 +437,17 @@ def q32_stream_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     text hash) first occurrence + copy count through the exactly-once
     sink; append mode emits only watermark-closed windows, which
     the oracle reproduces with the same final-watermark filter."""
-    return _run_stream_query(spark, sf_dir, "dedup").select(
+    from auto_data_tokenize_spark.streaming import pipeline
+
+    with _stream_case(spark, "q32") as case:
+        firsts = pipeline.dedup_stream(
+            _staged_transcripts(case, sf_dir),
+            window="1 hour",
+            watermark="10 minutes",
+        )
+        # small-state single trigger: see run_to_sink
+        result = case.run(firsts, shuffle_partitions=8)
+    return result.select(
         "window_start", "text_hash", "first_conv_id", "first_turn_idx", "n_copies"
     )
 
@@ -538,9 +526,6 @@ def q36_stream_near_dup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded signature table. Output: matched incoming doc ids. The
     oracle recomputes both sides' signatures/bands in SQL, so the gate
     decision (band collision, not fuzzy similarity) is exact."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.dedup import (
@@ -548,44 +533,34 @@ def q36_stream_near_dup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded_keys,
         minhash_signatures,
     )
-    from auto_data_tokenize_spark.streaming import pipeline as spipe
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     corpus_banded = banded_keys(minhash_signatures(_documents(spark, sf_dir)))
 
-    base = tempfile.mkdtemp(prefix="adt_q36_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
-        ["doc_id", "text"]
-    ]
-    def _mutate(i, t):
-        if i % 3 == 2:  # genuinely novel content — the gate must NOT flag
-            return f"novel content row {i} with entirely fresh unseen words"
-        if i % 3 == 1:  # light edit — near-dup, bands mostly survive
-            return "edited v2 " + t
-        return t  # exact re-crawl — every band collides
-    pdf["text"] = [_mutate(i, t) for i, t in zip(pdf["doc_id"], pdf["text"])]
-    pdf["doc_id"] = pdf["doc_id"] + 1000000
-    # stage as multiple files so the micro-batch scan itself
-    # parallelizes (one small parquet file = one scan partition); the
-    # gate's internal repartition covers single-file feeds regardless
-    n_files = 8
-    for i in range(n_files):
-        pdf.iloc[i::n_files].to_parquet(f"{in_dir}/docs-{i}.parquet", index=False)
+    with _stream_case(spark, "q36") as case:
+        in_dir = f"{case.dir}/in"
+        os.makedirs(in_dir)
+        pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
+            ["doc_id", "text"]
+        ]
+        def _mutate(i, t):
+            if i % 3 == 2:  # genuinely novel content — the gate must NOT flag
+                return f"novel content row {i} with entirely fresh unseen words"
+            if i % 3 == 1:  # light edit — near-dup, bands mostly survive
+                return "edited v2 " + t
+            return t  # exact re-crawl — every band collides
+        pdf["text"] = [_mutate(i, t) for i, t in zip(pdf["doc_id"], pdf["text"])]
+        pdf["doc_id"] = pdf["doc_id"] + 1000000
+        # stage as multiple files so the micro-batch scan itself
+        # parallelizes (one small parquet file = one scan partition); the
+        # gate's internal repartition covers single-file feeds regardless
+        n_files = 8
+        for i in range(n_files):
+            pdf.iloc[i::n_files].to_parquet(f"{in_dir}/docs-{i}.parquet", index=False)
 
-    st = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
-    with NearDupGate(corpus_banded) as gate:
-        gated = gate.apply(st)
-        sink = ExactlyOnceSink(f"{base}/out")
-        spipe.run_to_sink(gated, sink, f"{base}/ckpt")
-        result = (
-            _adopt_sink_output(spark, sink)
-            .select(F.col("id").alias("doc_id"))
-            .distinct()
-        )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        st = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
+        with NearDupGate(corpus_banded) as gate:
+            result = case.run(gate.apply(st))
+    return result.select(F.col("id").alias("doc_id")).distinct()
 
 
 def q37_avro_tokenize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,15 +632,10 @@ def q40_stream_infotype_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``window_time``). Append mode emits hourly windows closed by the
     final watermark; the oracle reproduces the same two-level rollup +
     watermark filter in SQL."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark import datagen
     from auto_data_tokenize_spark.operators.windows import infotype_rollup
-    from auto_data_tokenize_spark.streaming import pipeline as spipe
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
     from pyspark.sql.types import (
         StringType,
         StructField,
@@ -674,22 +644,18 @@ def q40_stream_infotype_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = datagen.ensure_sf(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix="adt_q40_")
-    det_in = f"{base}/det"
-    os.makedirs(det_in)
-    det_pd = pd.read_parquet(os.path.join(d, "detections.parquet"))
-    det_pd[["info_type", "ts"]].to_parquet(f"{det_in}/d.parquet", index=False)
+    with _stream_case(spark, "q40") as case:
+        det_in = f"{case.dir}/det"
+        os.makedirs(det_in)
+        det_pd = pd.read_parquet(os.path.join(d, "detections.parquet"))
+        det_pd[["info_type", "ts"]].to_parquet(f"{det_in}/d.parquet", index=False)
 
-    schema = StructType(
-        [StructField("info_type", StringType()), StructField("ts", TimestampType())]
-    )
-    st = spark.readStream.schema(schema).parquet(det_in)
-    rollup = infotype_rollup(st, watermark="10 minutes")
-    sink = ExactlyOnceSink(f"{base}/out")
-    spipe.run_to_sink(rollup, sink, f"{base}/ckpt", shuffle_partitions=2)
-    result = _adopt_sink_output(spark, sink)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        schema = StructType(
+            [StructField("info_type", StringType()), StructField("ts", TimestampType())]
+        )
+        st = spark.readStream.schema(schema).parquet(det_in)
+        rollup = infotype_rollup(st, watermark="10 minutes")
+        return case.run(rollup, shuffle_partitions=2)
 
 
 def q41_view_purchase_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -802,36 +768,89 @@ def q47_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_append_log(
-    pdf, staged: str, n_files: int = 8, order_col: str = "doc_id"
-) -> str:
-    """Stage a pandas frame as id-ordered sequential parquet files
-    with strictly increasing mtimes (FileStreamSource orders pending
-    files by modification time; ties break arbitrarily) — the
-    append-log arrival contract the order-dependent streaming
-    operators document."""
-    import time as _time
-
-    import numpy as np
-
-    os.makedirs(staged, exist_ok=True)
-    t0 = _time.time() - 100
-    pdf = pdf.sort_values(order_col).reset_index(drop=True)
-    for k, chunk in enumerate(np.array_split(pdf, n_files)):
-        p = f"{staged}/part-{k:03d}.parquet"
-        chunk.to_parquet(p)
-        os.utime(p, (t0 + k, t0 + k))
-    return staged
+_MAX_FILES_PER_TRIGGER = 2  # staged logs replay in several micro-batches
 
 
-def _stream_files(spark: SparkSession, staged: str, schema, max_files: int = 2):
-    """maxFilesPerTrigger-sliced file stream: ≥ 2 micro-batches so the
-    gates exercise cross-batch state, never one trivial batch."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(staged)
-    )
+class _StreamCase:
+    """One stream query's scratch dir ``dir``; see :func:`_stream_case`."""
+
+    def __init__(self, spark: SparkSession, base: str):
+        self.spark = spark
+        self.dir = base
+
+    def stage(
+        self, pdf, schema, order_col: str = "doc_id", n_files: int = 8
+    ) -> DataFrame:
+        """Stage ``pdf`` under ``in/`` as ``order_col``-ordered
+        sequential parquet files with strictly increasing mtimes
+        (FileStreamSource orders pending files by modification time;
+        ties break arbitrarily) — the append-log arrival contract the
+        order-dependent streaming operators document — and return the
+        ``maxFilesPerTrigger``-sliced stream over them, so gates
+        exercise cross-batch state, never one trivial batch."""
+        import time
+
+        import numpy as np
+
+        staged = os.path.join(self.dir, "in")
+        os.makedirs(staged)
+        t0 = time.time() - 100
+        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+        for k, chunk in enumerate(np.array_split(pdf, n_files)):
+            p = f"{staged}/part-{k:03d}.parquet"
+            chunk.to_parquet(p)
+            os.utime(p, (t0 + k, t0 + k))
+        return (
+            self.spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", _MAX_FILES_PER_TRIGGER)
+            .parquet(staged)
+        )
+
+    def sink(self, **kwargs):
+        """The case's ``ExactlyOnceSink`` under ``out/``; ``kwargs``
+        (e.g. upsert ``key_cols``/``version_col``) go to the sink."""
+        from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
+
+        return ExactlyOnceSink(os.path.join(self.dir, "out"), **kwargs)
+
+    def run(
+        self, stream_df, sink=None, shuffle_partitions: int | None = None
+    ) -> DataFrame:
+        """Run ``stream_df`` into ``sink`` (an ``ExactlyOnceSink`` or an
+        ``AdmissionGate``; default :meth:`sink`) through
+        ``pipeline.run_to_sink`` with its checkpoint under ``ckpt/``,
+        then adopt the underlying sink's committed rows out of the
+        case dir."""
+        from auto_data_tokenize_spark.streaming import pipeline
+
+        if sink is None:
+            sink = self.sink()
+        pipeline.run_to_sink(
+            stream_df,
+            sink,
+            os.path.join(self.dir, "ckpt"),
+            shuffle_partitions=shuffle_partitions,
+        )
+        return _adopt_sink_output(self.spark, getattr(sink, "sink", sink))
+
+
+@contextmanager
+def _stream_case(spark: SparkSession, name: str):
+    """Scaffold of every stream query: yields a :class:`_StreamCase`
+    over a fresh temp dir for the query's staged input, checkpoint and
+    sink (queries that write their own input layout put it under
+    ``case.dir``). The dir is removed when the block exits, on success
+    or on error; an error propagates. The reader that
+    :meth:`_StreamCase.run` returns reads an adopted keep dir OUTSIDE
+    the case dir; keep dirs live until process exit."""
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix=f"adt_{name}_")
+    try:
+        yield _StreamCase(spark, base)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 _STREAM_KEEP: list[str] = []
@@ -866,11 +885,17 @@ def _adopt_sink_output(spark: SparkSession, sink) -> DataFrame:
     and re-shipped it as a LocalRelation on every downstream execution
     (guide §5: the driver should do almost no data work) — measured
     0.3-1.5 s per streaming query at sf0.1. Moved dirs are reaped at
-    process exit."""
+    process exit. An Iceberg sink is refused: its data lives in the
+    catalog, so moving the marker dir would split it from its table."""
     import shutil
 
     from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
+    if sink.use_iceberg:
+        raise ValueError(
+            f"cannot adopt Iceberg sink {sink.iceberg_table!r}: its commit "
+            "markers must stay next to the catalog table"
+        )
     dest = os.path.join(_keep_dir(), "table")
     shutil.move(sink.table_path, dest)
     adopted = ExactlyOnceSink(
@@ -884,49 +909,22 @@ def _adopt_sink_output(spark: SparkSession, sink) -> DataFrame:
     return adopted.read_committed(spark)
 
 
-def _run_stream_to_sink(
-    spark: SparkSession,
-    stream_df,
-    base: str,
-    shuffle_partitions: int | None = None,
-    sink=None,
-):
-    """Run through the exactly-once sink, read committed rows back,
-    materialize them off the tempdir. ``sink`` overrides the default
-    plain-append sink (e.g. upsert mode)."""
-    from auto_data_tokenize_spark.streaming import pipeline
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
-
-    sink = sink or ExactlyOnceSink(f"{base}/out")
-    pipeline.run_to_sink(
-        stream_df, sink, f"{base}/ckpt", shuffle_partitions=shuffle_partitions
-    )
-    return _adopt_sink_output(spark, sink)
-
-
 def q48_stream_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sequence packing through the exactly-once sink: the
     per-lang offset state carries the concat-and-chop layout across
     micro-batches, so the committed stream output equals the batch
     q46 layout — the oracle is the SAME SQL twin."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.corpus import pack_sequences_stream
 
-    base = tempfile.mkdtemp(prefix="adt_stream_q_pack_")
-    try:
-        pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(spark, staged, spark.read.parquet(staged).schema)
-        stream_df = pack_sequences_stream(
-            st.select("doc_id", "lang", "text"), target_tokens=512
-        )
-        result = _run_stream_to_sink(spark, stream_df, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _stream_case(spark, "q48") as case:
+        pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
+            ["doc_id", "lang", "text"]
+        ]
+        st = case.stage(pdf, "doc_id long, lang string, text string")
+        packed = pack_sequences_stream(st, target_tokens=512)
+        result = case.run(packed, shuffle_partitions=2)
     return result.select("doc_id", "lang", "n_tokens", "offset", "pack_id")
 
 
@@ -963,9 +961,6 @@ def q50_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives die in the scan stage. Only maybe-survivors hit the
     exact broadcast verify. Same corpus/incoming construction as q49;
     the oracle is the q49 bit-array twin restricted to maybe rows."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.sketches import (
@@ -977,8 +972,7 @@ def q50_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter("doc_id % 2 = 0").select("doc_id", "text")
     words = bloom_words_array(corpus, m_bits=2048)
 
-    base = tempfile.mkdtemp(prefix="adt_stream_q_bloom_")
-    try:
+    with _stream_case(spark, "q50") as case:
         inc = pd.read_parquet(os.path.join(sf_dir, "documents.parquet")).loc[
             :, ["doc_id", "text"]
         ]
@@ -986,10 +980,10 @@ def q50_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         copies = inc[inc.doc_id % 4 == 0].assign(
             doc_id=lambda d: d.doc_id + 1_000_000
         )
-        staged = _stage_append_log(
-            pd.concat([fresh, copies]).reset_index(drop=True), f"{base}/in"
+        st = case.stage(
+            pd.concat([fresh, copies]).reset_index(drop=True),
+            "doc_id long, text string",
         )
-        st = _stream_files(spark, staged, "doc_id long, text string")
         survivors = st.filter(bloom_maybe_expr("text", words, m_bits=2048))
         # persisted: the static verify side of a stream-static join
         # re-executes its full plan (scan + distinct shuffle) on EVERY
@@ -1003,11 +997,9 @@ def q50_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 survivors["text"] == F.col("_cv"),
                 "left",
             ).select("doc_id", F.col("_cv").isNotNull().alias("is_dup"))
-            result = _run_stream_to_sink(spark, verified, base)
+            result = case.run(verified)
         finally:
             corpus_texts.unpersist()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return result.select("doc_id", "is_dup")
 
 
@@ -1086,31 +1078,20 @@ def q55_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaply, and the committed read resolves each key to its
     highest-version row — the dimension-maintenance shape. The oracle
     is the identical window resolution in SQL."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
-
-    base = tempfile.mkdtemp(prefix="adt_stream_q_upsert_")
-    try:
+    with _stream_case(spark, "q55") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet")).loc[
             :, ["doc_id", "n_chars"]
         ]
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, n_chars long")
+        st = case.stage(pdf, "doc_id long, n_chars long")
         updates = st.select(
             (F.col("doc_id") % 100).alias("k"),
             F.col("doc_id").alias("version"),
             "n_chars",
         )
-        sink = ExactlyOnceSink(
-            f"{base}/out", key_cols=("k",), version_col="version"
-        )
-        result = _run_stream_to_sink(spark, updates, base, sink=sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        sink = case.sink(key_cols=("k",), version_col="version")
+        result = case.run(updates, sink)
     return result.select("k", "version", "n_chars")
 
 
@@ -1185,9 +1166,6 @@ def q59_stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     stateless stream-static gate through the exactly-once sink. Output
     is the exact (doc_id, shingle) hit pairs, so the oracle (the same
     shingle construction in SQL) checks the gate decision pairwise."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.corpus import DecontaminationGate
@@ -1195,18 +1173,14 @@ def q59_stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = _documents(spark, sf_dir)
     ev = docs.filter(f"doc_id % {EVAL_MOD} = 0").select("doc_id", "text")
 
-    base = tempfile.mkdtemp(prefix="adt_q59_")
-    try:
+    with _stream_case(spark, "q59") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet")).loc[
             :, ["doc_id", "text"]
         ]
         pdf = pdf[pdf["doc_id"] % EVAL_MOD != 0]
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, text string")
+        st = case.stage(pdf, "doc_id long, text string")
         with DecontaminationGate(ev) as gate:
-            result = _run_stream_to_sink(spark, gate.apply(st), base)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            result = case.run(gate.apply(st))
     return result.select("doc_id", "shingle")
 
 
@@ -1284,14 +1258,12 @@ def q26_token_dictionary_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks, single trigger; oracle = the equivalent batch time-range
     join in SQL (TokenizedDataMerger's cross-stream analogue)."""
     import shutil
-    import tempfile
 
     import pandas as pd
 
     from auto_data_tokenize_spark import datagen
-    from auto_data_tokenize_spark.streaming import pipeline as spipe, source
+    from auto_data_tokenize_spark.streaming import source
     from auto_data_tokenize_spark.streaming.join import token_dictionary_join
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -1301,36 +1273,35 @@ def q26_token_dictionary_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = datagen.ensure_sf(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix="adt_q26_")
-    det_in = f"{base}/det"
-    dict_in = f"{base}/dict"
-    os.makedirs(det_in)
-    os.makedirs(dict_in)
-    det_pd = pd.read_parquet(os.path.join(d, "detections.parquet"))
-    det_pd[["conv_id", "turn_idx", "info_type", "token", "ts"]].to_parquet(
-        f"{det_in}/d.parquet", index=False
-    )
-    shutil.copy(os.path.join(d, "token_dictionary.parquet"), f"{dict_in}/t.parquet")
+    with _stream_case(spark, "q26") as case:
+        det_in = f"{case.dir}/det"
+        dict_in = f"{case.dir}/dict"
+        os.makedirs(det_in)
+        os.makedirs(dict_in)
+        det_pd = pd.read_parquet(os.path.join(d, "detections.parquet"))
+        det_pd[["conv_id", "turn_idx", "info_type", "token", "ts"]].to_parquet(
+            f"{det_in}/d.parquet", index=False
+        )
+        shutil.copy(
+            os.path.join(d, "token_dictionary.parquet"), f"{dict_in}/t.parquet"
+        )
 
-    det_schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("info_type", StringType()),
-            StructField("token", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    det_stream = spark.readStream.schema(det_schema).parquet(det_in)
-    dict_stream = source.token_dictionary_stream(spark, dict_in)
-    joined = token_dictionary_join(det_stream, dict_stream, interval="10 minutes")
-    sink = ExactlyOnceSink(f"{base}/out")
-    # 8 state partitions: the join's per-micro-batch state-store commit
-    # cost dominates at this rate (8.5 s -> 3.9 s measured at sf0.1);
-    # production sizes this to state volume, not cores
-    spipe.run_to_sink(joined, sink, f"{base}/ckpt", shuffle_partitions=8)
-    result = _adopt_sink_output(spark, sink)
-    shutil.rmtree(base, ignore_errors=True)
+        det_schema = StructType(
+            [
+                StructField("conv_id", StringType()),
+                StructField("turn_idx", IntegerType()),
+                StructField("info_type", StringType()),
+                StructField("token", StringType()),
+                StructField("ts", TimestampType()),
+            ]
+        )
+        det_stream = spark.readStream.schema(det_schema).parquet(det_in)
+        dict_stream = source.token_dictionary_stream(spark, dict_in)
+        joined = token_dictionary_join(det_stream, dict_stream, interval="10 minutes")
+        # 8 state partitions: the join's per-micro-batch state-store commit
+        # cost dominates at this rate (8.5 s -> 3.9 s measured at sf0.1);
+        # production sizes this to state volume, not cores
+        result = case.run(joined, shuffle_partitions=8)
     return result.select(
         "conv_id", "turn_idx", "info_type", "token", "ts", "dict_ts"
     )
@@ -1348,13 +1319,8 @@ def q28_stream_escalation_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same pattern through applyInPandasWithState on the detection
     stream (custom stateful operator), single trigger — must equal the
     batch twin and thus the same SQL oracle."""
-    import shutil
-    import tempfile
-
     from auto_data_tokenize_spark import datagen
-    from auto_data_tokenize_spark.streaming import pipeline as spipe
     from auto_data_tokenize_spark.streaming.cep import escalation_alerts_stream
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -1366,35 +1332,31 @@ def q28_stream_escalation_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     d = datagen.ensure_sf(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix="adt_q28_")
-    det_in = f"{base}/det"
-    os.makedirs(det_in)
-    det_pd = pd.read_parquet(os.path.join(d, "detections.parquet"))
-    det_pd.to_parquet(f"{det_in}/d.parquet", index=False)
+    with _stream_case(spark, "q28") as case:
+        det_in = f"{case.dir}/det"
+        os.makedirs(det_in)
+        det_pd = pd.read_parquet(os.path.join(d, "detections.parquet"))
+        det_pd.to_parquet(f"{det_in}/d.parquet", index=False)
 
-    schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("info_type", StringType()),
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("token", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    st = spark.readStream.schema(schema).parquet(det_in)
-    # bucketed state (the q149 pattern): ~19k live conversations per
-    # batch would otherwise each pay a Python group invocation + a
-    # state-store row write per micro-batch — measured 17.6 s vs 2.9 s
-    # at sf0.1 (OPTIMIZATION_r06.md); 8 state partitions sized to
-    # state volume, not cores (the q26 rationale)
-    alerts = escalation_alerts_stream(st, min_distinct=3, state_buckets=8)
-    sink = ExactlyOnceSink(f"{base}/out")
-    spipe.run_to_sink(alerts, sink, f"{base}/ckpt", shuffle_partitions=8)
-    result = _adopt_sink_output(spark, sink)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        schema = StructType(
+            [
+                StructField("conv_id", StringType()),
+                StructField("turn_idx", IntegerType()),
+                StructField("info_type", StringType()),
+                StructField("start", IntegerType()),
+                StructField("end", IntegerType()),
+                StructField("token", StringType()),
+                StructField("ts", TimestampType()),
+            ]
+        )
+        st = spark.readStream.schema(schema).parquet(det_in)
+        # bucketed state (the q149 pattern): ~19k live conversations per
+        # batch would otherwise each pay a Python group invocation + a
+        # state-store row write per micro-batch — measured 17.6 s vs 2.9 s
+        # at sf0.1 (OPTIMIZATION_r06.md); 8 state partitions sized to
+        # state volume, not cores (the q26 rationale)
+        alerts = escalation_alerts_stream(st, min_distinct=3, state_buckets=8)
+        return case.run(alerts, shuffle_partitions=8)
 
 
 def _with_prep(fn):
@@ -1653,15 +1615,10 @@ def q70_stream_k_anon_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     CHAINED stateful aggregations in ONE streaming query
     (risk.k_anonymity_monitor), append mode through the exactly-once
     sink. Oracle: same two-level rollup + final-watermark filter."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark import datagen  # noqa: F401 (parity prep)
     from auto_data_tokenize_spark.operators.risk import k_anonymity_monitor
-    from auto_data_tokenize_spark.streaming import pipeline as spipe
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
     from pyspark.sql.types import (
         DoubleType,
         StringType,
@@ -1670,35 +1627,31 @@ def q70_stream_k_anon_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         TimestampType,
     )
 
-    base = tempfile.mkdtemp(prefix="adt_q70_")
-    ev_in = f"{base}/ev"
-    os.makedirs(ev_in)
-    ev_pd = pd.read_parquet(os.path.join(sf_dir, "events.parquet"))
-    ev_pd[["event_type", "value", "ts"]].to_parquet(
-        f"{ev_in}/e.parquet", index=False
-    )
+    with _stream_case(spark, "q70") as case:
+        ev_in = f"{case.dir}/ev"
+        os.makedirs(ev_in)
+        ev_pd = pd.read_parquet(os.path.join(sf_dir, "events.parquet"))
+        ev_pd[["event_type", "value", "ts"]].to_parquet(
+            f"{ev_in}/e.parquet", index=False
+        )
 
-    schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    st = spark.readStream.schema(schema).parquet(ev_in)
-    deid = st.select(
-        "event_type",
-        F.floor(F.col("value") / F.lit(100.0)).cast("long").alias("value_bucket"),
-        "ts",
-    )
-    hist = k_anonymity_monitor(
-        deid, ["event_type", "value_bucket"], watermark="10 minutes"
-    )
-    sink = ExactlyOnceSink(f"{base}/out")
-    spipe.run_to_sink(hist, sink, f"{base}/ckpt", shuffle_partitions=2)
-    result = _adopt_sink_output(spark, sink)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        schema = StructType(
+            [
+                StructField("event_type", StringType()),
+                StructField("value", DoubleType()),
+                StructField("ts", TimestampType()),
+            ]
+        )
+        st = spark.readStream.schema(schema).parquet(ev_in)
+        deid = st.select(
+            "event_type",
+            F.floor(F.col("value") / F.lit(100.0)).cast("long").alias("value_bucket"),
+            "ts",
+        )
+        hist = k_anonymity_monitor(
+            deid, ["event_type", "value_bucket"], watermark="10 minutes"
+        )
+        return case.run(hist, shuffle_partitions=2)
 
 
 def q71_generalize_to_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1883,10 +1836,26 @@ def q77_stream_fpe_deidentify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from auto_data_tokenize_spark.sources.readers import ensure_parallelism
+    from auto_data_tokenize_spark.streaming import pipeline
 
-    # the committed read is a handful of sink files → few scan
-    # partitions; the per-row FF1 decrypt must fan out across cores
-    committed = ensure_parallelism(_run_stream_query(spark, sf_dir, "fpe"))
+    with _stream_case(spark, "q77") as case:
+        # 8 staged files = 8 scan partitions; the per-span FF1 crypto
+        # must fan out across all cores (stateless stream repartition —
+        # moving raw text once is cheap vs the Feistel rounds)
+        masked = pipeline.deidentify_stream(
+            _staged_transcripts(case, sf_dir).repartition(
+                spark.sparkContext.defaultParallelism
+            ),
+            {
+                "cryptoReplaceFfxFpeConfig": {
+                    "radix": 95,
+                    "surrogateInfoType": {"name": "ADT_TOKEN"},
+                }
+            },
+        )
+        # the committed read is a handful of sink files → few scan
+        # partitions; the per-row FF1 decrypt must fan out across cores
+        committed = ensure_parallelism(case.run(masked))
     cipher = fpe_cipher_for(
         "text", {"radix": 95, "surrogateInfoType": {"name": "ADT_TOKEN"}}
     )
@@ -1911,8 +1880,7 @@ def q78_stream_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stream stage is stateless (repartitioned per micro-batch,
     per-row codegen-friendly affine hashing); sink appends stay
     O(micro-batch) with merge-on-read resolution."""
-    import shutil
-    import tempfile
+    import time
 
     import pandas as pd
 
@@ -1920,18 +1888,14 @@ def q78_stream_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded_keys,
         minhash_signatures_rowwise,
     )
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
-    base = tempfile.mkdtemp(prefix="adt_q78_")
-    try:
+    with _stream_case(spark, "q78") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ].sort_values("doc_id")
-        in_dir = f"{base}/in"
+        in_dir = f"{case.dir}/in"
         os.makedirs(in_dir)
-        import time as _time
-
-        t0 = _time.time() - 100
+        t0 = time.time() - 100
         wave1 = pdf.assign(crawl_ver=1)
         for k in range(4):
             p = f"{in_dir}/crawl1-{k}.parquet"
@@ -1945,8 +1909,10 @@ def q78_stream_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             wave2.iloc[k::2].to_parquet(p, index=False)
             os.utime(p, (t0 + 10 + k, t0 + 10 + k))
 
-        st = _stream_files(
-            spark, in_dir, "doc_id long, text string, crawl_ver long"
+        st = (
+            spark.readStream.schema("doc_id long, text string, crawl_ver long")
+            .option("maxFilesPerTrigger", _MAX_FILES_PER_TRIGGER)
+            .parquet(in_dir)
         )
         # spread each staged file's rows across cores before the
         # per-row shingle hashing (stateless stream repartition; same
@@ -1956,12 +1922,8 @@ def q78_stream_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             minhash_signatures_rowwise(st, extra_cols=("crawl_ver",)),
             extra_cols=("crawl_ver",),
         )
-        sink = ExactlyOnceSink(
-            f"{base}/out", key_cols=("id", "band_idx"), version_col="crawl_ver"
-        )
-        result = _run_stream_to_sink(spark, bands, base, sink=sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        sink = case.sink(key_cols=("id", "band_idx"), version_col="crawl_ver")
+        result = case.run(bands, sink)
     return result.select(
         "id",
         F.col("band_idx").cast("long").alias("band_idx"),
@@ -1981,15 +1943,11 @@ def q79_stream_corpus_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate in SQL with the identical final-watermark filter.
     Scale: one windowed shuffle with map-side partial aggregation;
     state = one row per open (window, lang)."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.textstats import ws_tokens_expr
 
-    base = tempfile.mkdtemp(prefix="adt_q79_")
-    try:
+    with _stream_case(spark, "q79") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text", "lang"]
         ]
@@ -1997,9 +1955,8 @@ def q79_stream_corpus_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["doc_id"], unit="s"
         )
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, lang string, ts timestamp"
+        st = case.stage(
+            pdf, "doc_id long, text string, lang string, ts timestamp"
         )
         agg = (
             st.withWatermark("ts", "30 seconds")
@@ -2015,10 +1972,7 @@ def q79_stream_corpus_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lang", "n_docs", "total_tokens", "max_tokens",
             )
         )
-        result = _run_stream_to_sink(spark, agg, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(agg, shuffle_partitions=2)
 
 
 def q80_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2063,28 +2017,22 @@ def q82_stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow codegen quality filter FIRST, one band semi-join (bucketed
     corpus table co-locates it at real scale), broadcast eval
     shingles; no state store, no watermark."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.dedup import (
         banded_keys,
         minhash_signatures,
     )
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import (
         IngestAdmissionPipeline,
     )
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     docs = _documents(spark, sf_dir)
     ev = docs.filter(f"doc_id % {EVAL_MOD} = 0").select("doc_id", "text")
     corpus = docs.filter(f"doc_id % {EVAL_MOD} != 0").select("doc_id", "text")
     corpus_banded = banded_keys(minhash_signatures(corpus))
 
-    base = tempfile.mkdtemp(prefix="adt_q82_")
-    try:
+    with _stream_case(spark, "q82") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ].sort_values("doc_id")
@@ -2106,18 +2054,11 @@ def q82_stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         inc["text"] = [_mk(d, t) for d, t in zip(inc["doc_id"], inc["text"])]
         inc["doc_id"] = inc["doc_id"] + 1000000
-        staged = _stage_append_log(inc, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, text string")
+        st = case.stage(inc, "doc_id long, text string")
         st = st.repartition(spark.sparkContext.defaultParallelism)
-        sink = ExactlyOnceSink(f"{base}/out")
-        with IngestAdmissionPipeline(corpus_banded, ev, sink) as pipe:
-            pipeline.run_to_sink(st, pipe, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink).select(
-            "doc_id", F.md5("text").alias("text_md5")
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        with IngestAdmissionPipeline(corpus_banded, ev, case.sink()) as pipe:
+            result = case.run(st, pipe)
+    return result.select("doc_id", F.md5("text").alias("text_md5"))
 
 
 _PAGE_HEADER = "accept all cookies to continue."
@@ -2265,36 +2206,23 @@ def q93_stream_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static join against the persisted census (bounded by the
     repeated-boilerplate universe); no state store — replayed batches
     re-derive identical rows and the sink no-ops."""
-    import shutil
-    import tempfile
-
     from auto_data_tokenize_spark.operators.lines import (
         duplicated_window_hashes,
     )
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import BoilerplateGate
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     pages = _span_pages(_documents(spark, sf_dir))
     census = duplicated_window_hashes(pages, k=8, min_docs=2)
 
-    base = tempfile.mkdtemp(prefix="adt_q93_")
-    try:
+    with _stream_case(spark, "q93") as case:
         mix = pages.toPandas().sort_values("doc_id")
-        staged = _stage_append_log(mix, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, text string")
+        st = case.stage(mix, "doc_id long, text string")
         st = st.repartition(spark.sparkContext.defaultParallelism)
-        sink = ExactlyOnceSink(f"{base}/out")
         with BoilerplateGate(
-            census, sink, max_covered_frac=0.5, k=8
+            census, case.sink(), max_covered_frac=0.5, k=8
         ) as gate:
-            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink).select(
-            "doc_id", "n_tokens", "n_covered", "covered_frac"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+            result = case.run(st, gate)
+    return result.select("doc_id", "n_tokens", "n_covered", "covered_frac")
 
 
 _URL_BLOCKED = ("src3.example.com", "src7.example.com")
@@ -2370,16 +2298,11 @@ def q95_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     same threshold. Scale per micro-batch: one lag-window gram pass,
     the <= 4096-row ratio table broadcasts, one id groupBy; no state
     store."""
-    import shutil
-    import tempfile
-
     from auto_data_tokenize_spark.operators.dsir import (
         dsir_default_ratio_micro6,
         dsir_log_ratios,
     )
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import DsirGate
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     docs = _documents(spark, sf_dir).select("doc_id", "text")
     target = docs.join(
@@ -2393,27 +2316,19 @@ def q95_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, target, n_buckets=4096
     ).first()[0]
 
-    base = tempfile.mkdtemp(prefix="adt_q95_")
-    try:
+    with _stream_case(spark, "q95") as case:
         mix = docs.toPandas().sort_values("doc_id")
-        staged = _stage_append_log(mix, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, text string")
+        st = case.stage(mix, "doc_id long, text string")
         st = st.repartition(spark.sparkContext.defaultParallelism)
-        sink = ExactlyOnceSink(f"{base}/out")
         with DsirGate(
             ratios,
             default,
-            sink,
+            case.sink(),
             min_avg_ratio_micro6=-85000,
             n_buckets=4096,
         ) as gate:
-            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink).select(
-            "doc_id", "n_grams", "logw_micro6"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+            result = case.run(st, gate)
+    return result.select("doc_id", "n_grams", "logw_micro6")
 
 
 def q91_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2530,21 +2445,15 @@ def q87_stream_fluency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized) model tables; no state store, no watermark —
     redelivered batches re-derive identical rows and the sink
     no-ops."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.lm import train_stupid_backoff
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import FluencyGate
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     docs = _documents(spark, sf_dir).select("doc_id", "text")
     lm = train_stupid_backoff(docs.filter(f"doc_id % {EVAL_MOD} != 0"))
 
-    base = tempfile.mkdtemp(prefix="adt_q87_")
-    try:
+    with _stream_case(spark, "q87") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ].sort_values("doc_id")
@@ -2559,18 +2468,13 @@ def q87_stream_fluency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         gib["doc_id"] = gib["doc_id"] + 2000000
         mix = pd.concat([pdf, rev, gib], ignore_index=True)
-        staged = _stage_append_log(mix, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, text string")
+        st = case.stage(mix, "doc_id long, text string")
         st = st.repartition(spark.sparkContext.defaultParallelism)
-        sink = ExactlyOnceSink(f"{base}/out")
-        with FluencyGate(lm, sink, min_avg_logp=-7.0) as gate:
-            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink).select(
-            "doc_id", "n_tokens", "n_hit3", "n_hit2", "n_hit1", "avg_logp"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        with FluencyGate(lm, case.sink(), min_avg_logp=-7.0) as gate:
+            result = case.run(st, gate)
+    return result.select(
+        "doc_id", "n_tokens", "n_hit3", "n_hit2", "n_hit1", "avg_logp"
+    )
 
 
 def q88_conversation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2680,34 +2584,23 @@ def q98_stream_semantic_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     outcomes are exercised. Arrival-vs-arrival dedup is the batch
     operator's job (q96); the gate checks arrivals against the corpus
     only — the oracle is the same NOT-EXISTS over corpus pairs."""
-    import shutil
-    import tempfile
-
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import SemanticDedupGate
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     aug = _augmented_embeddings(spark, sf_dir)
     corpus = aug.filter(F.col("vec_id") < 1000000)
     arrivals = aug.filter(F.col("vec_id") >= 1000000)
 
-    base = tempfile.mkdtemp(prefix="adt_q98_")
-    try:
+    with _stream_case(spark, "q98") as case:
         pdf = arrivals.toPandas().sort_values("vec_id")
-        staged = _stage_append_log(
-            pdf, f"{base}/in", n_files=4, order_col="vec_id"
+        st = case.stage(
+            pdf, "vec_id long, v array<double>", order_col="vec_id", n_files=4
         )
-        st = _stream_files(spark, staged, "vec_id long, v array<double>")
         st = st.repartition(spark.sparkContext.defaultParallelism)
-        sink = ExactlyOnceSink(f"{base}/out")
         with SemanticDedupGate(
-            corpus, sink, threshold=0.9, nlist=16, nprobe=4, vec_col="v"
+            corpus, case.sink(), threshold=0.9, nlist=16, nprobe=4, vec_col="v"
         ) as gate:
-            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink).select("vec_id")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+            result = case.run(st, gate)
+    return result.select("vec_id")
 
 
 def q99_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2996,9 +2889,6 @@ def q111_stream_delta_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the exactly-once sink ('removed' is unobservable from an
     arriving-doc gate — that side stays batch/tombstone). Oracle: the
     q109 SQL minus its 'removed' rows."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.versioning import (
@@ -3014,20 +2904,14 @@ def q111_stream_delta_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("old:"), F.coalesce(F.col("text"), F.lit(""))),
         ).otherwise(F.col("text")),
     )
-    base = tempfile.mkdtemp(prefix="adt_q111_")
-    try:
+    with _stream_case(spark, "q111") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet")).loc[
             :, ["doc_id", "text", "lang"]
         ]
         pdf = pdf[pdf["doc_id"] % 10 != 3]
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, lang string"
-        )
+        st = case.stage(pdf, "doc_id long, text string, lang string")
         with SnapshotDeltaGate(v1, ["text", "lang"]) as gate:
-            result = _run_stream_to_sink(spark, gate.apply(st), base)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            result = case.run(gate.apply(st))
     return result.select("doc_id", "status", "old_hash", "new_hash")
 
 
@@ -3045,17 +2929,13 @@ def q112_stream_trending_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously. Append mode emits only watermark-closed windows;
     the oracle reproduces the identical tokenization, threshold, and
     final-watermark predicate in SQL."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.streaming.pipeline import (
         trending_tokens_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="adt_q112_")
-    try:
+    with _stream_case(spark, "q112") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ]
@@ -3063,20 +2943,14 @@ def q112_stream_trending_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             "2026-01-01"
         ).to_datetime64() + pd.to_timedelta(pdf["doc_id"], unit="s")
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, ts timestamp"
-        )
+        st = case.stage(pdf, "doc_id long, text string, ts timestamp")
         agg = trending_tokens_stream(
             st,
             duration="1 minute",
             watermark="30 seconds",
             min_count=TREND_MIN_COUNT,
         )
-        result = _run_stream_to_sink(spark, agg, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(agg, shuffle_partitions=2)
 
 
 def q113_incremental_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3139,17 +3013,13 @@ def q115_stream_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     holdback), state is one counter per open (window, source), and
     decisions are micro-batch-slicing invariant under ordered arrival.
     Oracle: the row_number() twin at the same quota."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.streaming.ingest import (
         source_quota_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="adt_q115_")
-    try:
+    with _stream_case(spark, "q115") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "source"]
         ]
@@ -3157,15 +3027,9 @@ def q115_stream_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
             "2026-01-01"
         ).to_datetime64() + pd.to_timedelta(pdf["doc_id"], unit="s")
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, source string, ts timestamp"
-        )
+        st = case.stage(pdf, "doc_id long, source string, ts timestamp")
         gated = source_quota_stream(st, quota=QUOTA_PER_WINDOW)
-        result = _run_stream_to_sink(spark, gated, base, shuffle_partitions=8)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(gated, shuffle_partitions=8)
 
 
 RESERVOIR_N = 10  # maintained sample slots per stratum
@@ -3182,34 +3046,22 @@ def q116_stream_stratified_reservoir(
     audit/eval sample of a live corpus. Bottom-k of a set is
     arrival-order-invariant, so the final resolved sample EQUALS the
     batch stratified_sample at the same seed, which is the oracle."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.streaming.ingest import (
         stratified_reservoir_stream,
     )
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
-    base = tempfile.mkdtemp(prefix="adt_q116_")
-    try:
+    with _stream_case(spark, "q116") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "lang"]
         ]
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, lang string")
+        st = case.stage(pdf, "doc_id long, lang string")
         sampled = stratified_reservoir_stream(
             st, ["lang"], n_per_stratum=RESERVOIR_N
         )
-        sink = ExactlyOnceSink(
-            f"{base}/out", key_cols=("lang", "slot"), version_col="version"
-        )
-        result = _run_stream_to_sink(
-            spark, sampled, base, shuffle_partitions=8, sink=sink
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        sink = case.sink(key_cols=("lang", "slot"), version_col="version")
+        result = case.run(sampled, sink, shuffle_partitions=8)
     return result.select("lang", "slot", "doc_id")
 
 
@@ -3222,17 +3074,13 @@ def q117_stream_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     A collapsing TTR is the live signature of a template flood.
     Oracle: COUNT(DISTINCT)/COUNT(*) per window at the identical
     final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.streaming.pipeline import (
         distinct_tokens_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="adt_q117_")
-    try:
+    with _stream_case(spark, "q117") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ]
@@ -3240,17 +3088,11 @@ def q117_stream_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             "2026-01-01"
         ).to_datetime64() + pd.to_timedelta(pdf["doc_id"], unit="s")
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, ts timestamp"
-        )
+        st = case.stage(pdf, "doc_id long, text string, ts timestamp")
         agg = distinct_tokens_stream(
             st, duration="1 minute", watermark="30 seconds"
         )
-        result = _run_stream_to_sink(spark, agg, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(agg, shuffle_partitions=2)
 
 
 def q118_stream_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3261,34 +3103,22 @@ def q118_stream_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     view maintenance, the all-time complement of the q79 windowed
     monitor. Running sums are arrival-order-invariant, so the resolved
     card equals the batch aggregate (the oracle), under any slicing."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.streaming.pipeline import (
         dataset_card_stream,
     )
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
-    base = tempfile.mkdtemp(prefix="adt_q118_")
-    try:
+    with _stream_case(spark, "q118") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "lang", "source", "text"]
         ]
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, lang string, source string, text string"
+        st = case.stage(
+            pdf, "doc_id long, lang string, source string, text string"
         )
         card = dataset_card_stream(st)
-        sink = ExactlyOnceSink(
-            f"{base}/out", key_cols=("lang", "source"), version_col="version"
-        )
-        result = _run_stream_to_sink(
-            spark, card, base, shuffle_partitions=8, sink=sink
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        sink = case.sink(key_cols=("lang", "source"), version_col="version")
+        result = case.run(card, sink, shuffle_partitions=8)
     # -1 sentinel for all-NULL-text strata: the parity harness sorts
     # rows as tuples over alphabetically sorted columns, and a nullable
     # numeric behind the non-unique 'lang' column would raise on the
@@ -3312,14 +3142,7 @@ def q119_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     before their user's first version keep NULL attributes. Oracle:
     DuckDB's native ASOF LEFT JOIN over the identically-constructed
     dimension."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import AsofEnrichGate
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
         "event_id", "user_id", "ts"
@@ -3337,22 +3160,16 @@ def q119_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("user_id") + F.col("k")) % 5).alias("tier"),
         )
     )
-    base = tempfile.mkdtemp(prefix="adt_q119_")
-    try:
+    with _stream_case(spark, "q119") as case:
         pdf = ev.toPandas()
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in", order_col="event_id")
-        st = _stream_files(
-            spark, staged, "event_id long, user_id long, ts timestamp"
+        st = case.stage(
+            pdf, "event_id long, user_id long, ts timestamp", order_col="event_id"
         )
-        sink = ExactlyOnceSink(f"{base}/out")
         with AsofEnrichGate(
-            dim, sink, on="user_id", right_cols=["tier"]
+            dim, case.sink(), on="user_id", right_cols=["tier"]
         ) as gate:
-            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            result = case.run(st, gate)
     return result.select(
         "event_id",
         "user_id",
@@ -3371,33 +3188,17 @@ def q120_stream_assemble_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
     so arrival order never matters; all-NULL sessions assemble NULL
     (the SQL string_agg contract). Oracle: the q23 gap-islands SQL +
     ordered string_agg at the identical final-watermark predicate."""
-    import shutil
-    import tempfile
-
-    from auto_data_tokenize_spark import datagen
-    from auto_data_tokenize_spark.streaming import pipeline, source
     from auto_data_tokenize_spark.streaming.pipeline import (
         assemble_sessions_stream,
     )
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
-    d = datagen.ensure_sf(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix="adt_q120_")
-    try:
-        staged = source.stage_stream_input(
-            os.path.join(d, "transcripts.parquet"), f"{base}/in", n_files=8
+    with _stream_case(spark, "q120") as case:
+        sessions = assemble_sessions_stream(
+            _staged_transcripts(case, sf_dir),
+            gap="30 minutes",
+            watermark="10 minutes",
         )
-        st = source.transcripts_stream(spark, staged)
-        stream_df = assemble_sessions_stream(
-            st, gap="30 minutes", watermark="10 minutes"
-        )
-        sink = ExactlyOnceSink(f"{base}/out")
-        pipeline.run_to_sink(
-            stream_df, sink, f"{base}/ckpt", shuffle_partitions=8
-        )
-        result = _adopt_sink_output(spark, sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        result = case.run(sessions, shuffle_partitions=8)
     return result.select(
         "conv_id", "session_start", "session_end", "n_turns", "text"
     )
@@ -3414,36 +3215,23 @@ def q101_stream_nb_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL filtered at the same integer threshold. Per micro-batch: one
     token explode, the vocabulary-bounded ratio table broadcasts, one
     id groupBy — no state store."""
-    import shutil
-    import tempfile
-
     from auto_data_tokenize_spark.operators.quality_clf import train_nb
-    from auto_data_tokenize_spark.streaming import pipeline
     from auto_data_tokenize_spark.streaming.ingest import NbQualityGate
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     docs = _documents(spark, sf_dir).select("doc_id", "text", "lang")
     model = train_nb(
         docs.withColumn("label", F.col("lang") == "en"), min_count=2
     )
 
-    base = tempfile.mkdtemp(prefix="adt_q101_")
-    try:
+    with _stream_case(spark, "q101") as case:
         pdf = docs.select("doc_id", "text").toPandas().sort_values("doc_id")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, text string")
+        st = case.stage(pdf, "doc_id long, text string")
         st = st.repartition(spark.sparkContext.defaultParallelism)
-        sink = ExactlyOnceSink(f"{base}/out")
         with NbQualityGate(
-            model, sink, min_score_micro6=NB_GATE_MIN_SCORE_MICRO6
+            model, case.sink(), min_score_micro6=NB_GATE_MIN_SCORE_MICRO6
         ) as gate:
-            pipeline.run_to_sink(st, gate, f"{base}/ckpt")
-        result = _adopt_sink_output(spark, sink).select(
-            "doc_id", "n_tokens", "score_micro6"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+            result = case.run(st, gate)
+    return result.select("doc_id", "n_tokens", "score_micro6")
 
 
 SKEW_TOP_N, SKEW_PARTS = 20, 32
@@ -3478,9 +3266,6 @@ def q122_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast baseline join between them, append mode through the
     exactly-once sink. Oracle: the identical windowed L1 in SQL at the
     same final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.textstats import (
@@ -3495,8 +3280,7 @@ def q122_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_raw = baseline_shares(docs, "lang")
     base_df = spark.createDataFrame(base_raw.collect(), base_raw.schema)
 
-    base = tempfile.mkdtemp(prefix="adt_q122_")
-    try:
+    with _stream_case(spark, "q122") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "lang"]
         ]
@@ -3504,8 +3288,7 @@ def q122_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["doc_id"], unit="s"
         )
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(spark, staged, "doc_id long, lang string, ts timestamp")
+        st = case.stage(pdf, "doc_id long, lang string, ts timestamp")
         mon = distribution_drift_monitor(
             st,
             "lang",
@@ -3513,10 +3296,7 @@ def q122_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             window="1 minute",
             watermark="30 seconds",
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 def q123_residual_leak_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3574,20 +3354,10 @@ def q125_stream_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     flooding. One windowed groupBy, state freed per closed window.
     Oracle: the same bucket/threshold SQL at the identical
     final-watermark predicate."""
-    import shutil
-    import tempfile
-
-    from auto_data_tokenize_spark import datagen
     from auto_data_tokenize_spark.operators.skew import hot_keys_monitor
-    from auto_data_tokenize_spark.streaming import source
 
-    d = datagen.ensure_sf(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix="adt_q125_")
-    try:
-        staged = source.stage_stream_input(
-            os.path.join(d, "transcripts.parquet"), f"{base}/in", n_files=8
-        )
-        st = source.transcripts_stream(spark, staged)
+    with _stream_case(spark, "q125") as case:
+        st = _staged_transcripts(case, sf_dir)
         mon = hot_keys_monitor(
             st.select("conv_id", "ts"),
             "conv_id",
@@ -3595,10 +3365,7 @@ def q125_stream_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="10 minutes",
             min_count=HOT_KEY_MIN,
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 EMB_DIM = 64
@@ -3614,9 +3381,6 @@ def q126_stream_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     means, then a stateless broadcast join with the 1-row baseline and
     a pure-codegen cosine. Oracle: identical per-dim averaging /
     cosine / rounding in SQL at the same final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.similarity import (
@@ -3630,8 +3394,7 @@ def q126_stream_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_raw = centroid(emb, "embedding", EMB_DIM)
     base_df = spark.createDataFrame(base_raw.collect(), base_raw.schema)
 
-    base = tempfile.mkdtemp(prefix="adt_q126_")
-    try:
+    with _stream_case(spark, "q126") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "embeddings.parquet"))[
             ["vec_id", "embedding"]
         ]
@@ -3639,11 +3402,10 @@ def q126_stream_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["vec_id"], unit="s"
         )
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in", order_col="vec_id")
-        st = _stream_files(
-            spark,
-            staged,
+        st = case.stage(
+            pdf,
             "vec_id long, embedding array<float>, ts timestamp",
+            order_col="vec_id",
         )
         mon = centroid_drift_monitor(
             st,
@@ -3653,10 +3415,7 @@ def q126_stream_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             window="1 minute",
             watermark="30 seconds",
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 OOV_MIN_DF, OOV_TOP_K = 2, 20
@@ -3672,9 +3431,6 @@ def q127_stream_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     before any quality score moves. Stateless explode + broadcast
     vocab join, then ONE windowed groupBy. Oracle: same vocabulary and
     rate SQL at the identical final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.textstats import (
@@ -3690,8 +3446,7 @@ def q127_stream_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab = spark.createDataFrame(vocab_raw.collect(), vocab_raw.schema)
 
-    base = tempfile.mkdtemp(prefix="adt_q127_")
-    try:
+    with _stream_case(spark, "q127") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ]
@@ -3699,17 +3454,11 @@ def q127_stream_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["doc_id"], unit="s"
         )
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, ts timestamp"
-        )
+        st = case.stage(pdf, "doc_id long, text string, ts timestamp")
         mon = oov_rate_monitor(
             st, vocab, window="1 minute", watermark="30 seconds"
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 NULL_TEXT_MOD, NULL_LANG_MOD = 11, 13
@@ -3727,15 +3476,11 @@ def q128_stream_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the same pass; the long-form un-pivot is stateless codegen.
     Oracle: same fault + same per-column rollup at the identical
     final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.errors import completeness_monitor
 
-    base = tempfile.mkdtemp(prefix="adt_q128_")
-    try:
+    with _stream_case(spark, "q128") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text", "lang"]
         ].copy()
@@ -3745,17 +3490,13 @@ def q128_stream_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["doc_id"], unit="s"
         )
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, lang string, ts timestamp"
+        st = case.stage(
+            pdf, "doc_id long, text string, lang string, ts timestamp"
         )
         mon = completeness_monitor(
             st, ["text", "lang"], window="1 minute", watermark="30 seconds"
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 DUP_MOD = 7
@@ -3771,15 +3512,11 @@ def q129_stream_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the q70 pattern); state freed per closed window. Oracle: the
     same doubled feed + two-level rollup at the identical
     final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.dedup import dup_rate_monitor
 
-    base = tempfile.mkdtemp(prefix="adt_q129_")
-    try:
+    with _stream_case(spark, "q129") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "text"]
         ]
@@ -3789,17 +3526,11 @@ def q129_stream_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             feed["doc_id"], unit="s"
         )
         feed["ts"] = feed["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(feed, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, text string, ts timestamp"
-        )
+        st = case.stage(feed, "doc_id long, text string, ts timestamp")
         mon = dup_rate_monitor(
             st, window="1 minute", watermark="30 seconds"
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 DP_EPS, DP_SEED = 0.5, "adt-dp-r5"
@@ -3868,15 +3599,11 @@ def q132_stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window-start epoch so the oracle recomputes every draw.
     Oracle: same bucketing + same transform at the identical
     final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.risk import dp_histogram_monitor
 
-    base = tempfile.mkdtemp(prefix="adt_q132_")
-    try:
+    with _stream_case(spark, "q132") as case:
         pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))[
             ["doc_id", "lang"]
         ]
@@ -3884,10 +3611,7 @@ def q132_stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["doc_id"], unit="s"
         )
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        staged = _stage_append_log(pdf, f"{base}/in")
-        st = _stream_files(
-            spark, staged, "doc_id long, lang string, ts timestamp"
-        )
+        st = case.stage(pdf, "doc_id long, lang string, ts timestamp")
         mon = dp_histogram_monitor(
             st,
             ["lang"],
@@ -3896,10 +3620,7 @@ def q132_stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             epsilon=DP_EPS,
             seed=DP_SEED,
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=2)
 
 
 def q133_token_scope_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3946,8 +3667,6 @@ def q134_stream_token_scope_monitor(
     freed per closed window. Oracle: the same faulted feed + fan-out
     + distinct rollup at the identical final-watermark predicate."""
     import hashlib
-    import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -3960,8 +3679,7 @@ def q134_stream_token_scope_monitor(
 
     from auto_data_tokenize_spark import datagen
 
-    base = tempfile.mkdtemp(prefix="adt_q134_")
-    try:
+    with _stream_case(spark, "q134") as case:
         # detections/transcripts are datagen fixtures (the oracle reads
         # the same REPO/data/<sf> paths), not driver sf_dir tables
         dd = datagen.ensure_sf(_sf_name(sf_dir))
@@ -3987,20 +3705,16 @@ def q134_stream_token_scope_monitor(
             ["ts", "value_hash", "scope", "token"]
         ).reset_index(drop=True)
         feed["event_id"] = range(len(feed))
-        staged = _stage_append_log(feed, f"{base}/in", order_col="event_id")
-        st = _stream_files(
-            spark,
-            staged,
+        st = case.stage(
+            feed,
             "ts timestamp, info_type string, value_hash string, "
             "scope string, token string, event_id long",
+            order_col="event_id",
         )
         mon = token_scope_monitor(
             st, window="1 minute", watermark="30 seconds"
         )
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=4)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(mon, shuffle_partitions=4)
 
 
 # erasure-request slice: identities whose md5 starts with one of these
@@ -4068,14 +3782,10 @@ def q137_stream_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFra
     style, so erased conversations vanish from reads regardless of
     arrival order or micro-batch redelivery. Output: the surviving
     turns; oracle: the batch anti-join twin."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark import datagen
     from auto_data_tokenize_spark.operators.linkage import normalize_identity
-    from auto_data_tokenize_spark.streaming.sink import ExactlyOnceSink
 
     det, tr = _ext_detections(spark, sf_dir)
     idx = (
@@ -4100,77 +3810,72 @@ def q137_stream_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     d = datagen.ensure_extended(_sf_name(sf_dir))
-    base = tempfile.mkdtemp(prefix="adt_q137_")
     try:
-        corpus = pd.read_parquet(
-            os.path.join(d, "transcripts_ext.parquet")
-        ).loc[:, ["conv_id", "turn_idx", "text"]]
-        rows = pd.DataFrame(
-            {
-                "kind": "row",
-                "conv_id": corpus["conv_id"].astype("string"),
-                "turn_idx": corpus["turn_idx"].astype("Int32"),
-                "text": corpus["text"].astype("string"),
-                "identity": pd.array([None] * len(corpus), dtype="string"),
-                "version": 0,
-                "dead": False,
-            }
-        )
-        req = (
-            idx.filter(
-                F.substring(F.md5("identity"), 1, 1).isin(*ERASE_DIGITS)
+        with _stream_case(spark, "q137") as case:
+            corpus = pd.read_parquet(
+                os.path.join(d, "transcripts_ext.parquet")
+            ).loc[:, ["conv_id", "turn_idx", "text"]]
+            rows = pd.DataFrame(
+                {
+                    "kind": "row",
+                    "conv_id": corpus["conv_id"].astype("string"),
+                    "turn_idx": corpus["turn_idx"].astype("Int32"),
+                    "text": corpus["text"].astype("string"),
+                    "identity": pd.array([None] * len(corpus), dtype="string"),
+                    "version": 0,
+                    "dead": False,
+                }
             )
-            .select("identity")
-            .distinct()
-            .toPandas()
-        )
-        erase = pd.DataFrame(
-            {
-                "kind": "erase",
-                "conv_id": pd.array([None] * len(req), dtype="string"),
-                "turn_idx": pd.array([None] * len(req), dtype="Int32"),
-                "text": pd.array([None] * len(req), dtype="string"),
-                "identity": req["identity"].astype("string"),
-                "version": 1,
-                "dead": True,
-            }
-        )
-        feed = pd.concat([rows, erase], ignore_index=True)
-        feed["seq"] = range(len(feed))
-        staged = _stage_append_log(feed, f"{base}/in", order_col="seq")
-        st = _stream_files(
-            spark,
-            staged,
-            "kind string, conv_id string, turn_idx int, text string, "
-            "identity string, version long, dead boolean, seq long",
-        )
-        upserts = st.filter(F.col("kind") == "row").select(
-            "conv_id", "turn_idx", "text", "version", "dead"
-        )
-        tomb = (
-            st.filter(F.col("kind") == "erase")
-            .select("identity", "version", "dead")
-            .join(fanout, "identity")
-            .select(
-                "conv_id",
-                "turn_idx",
-                F.lit(None).cast("string").alias("text"),
-                "version",
-                "dead",
+            req = (
+                idx.filter(
+                    F.substring(F.md5("identity"), 1, 1).isin(*ERASE_DIGITS)
+                )
+                .select("identity")
+                .distinct()
+                .toPandas()
             )
-        )
-        sink = ExactlyOnceSink(
-            f"{base}/out",
-            key_cols=("conv_id", "turn_idx"),
-            version_col="version",
-            tombstone_col="dead",
-        )
-        result = _run_stream_to_sink(
-            spark, upserts.unionByName(tomb), base, sink=sink
-        )
+            erase = pd.DataFrame(
+                {
+                    "kind": "erase",
+                    "conv_id": pd.array([None] * len(req), dtype="string"),
+                    "turn_idx": pd.array([None] * len(req), dtype="Int32"),
+                    "text": pd.array([None] * len(req), dtype="string"),
+                    "identity": req["identity"].astype("string"),
+                    "version": 1,
+                    "dead": True,
+                }
+            )
+            feed = pd.concat([rows, erase], ignore_index=True)
+            feed["seq"] = range(len(feed))
+            st = case.stage(
+                feed,
+                "kind string, conv_id string, turn_idx int, text string, "
+                "identity string, version long, dead boolean, seq long",
+                order_col="seq",
+            )
+            upserts = st.filter(F.col("kind") == "row").select(
+                "conv_id", "turn_idx", "text", "version", "dead"
+            )
+            tomb = (
+                st.filter(F.col("kind") == "erase")
+                .select("identity", "version", "dead")
+                .join(fanout, "identity")
+                .select(
+                    "conv_id",
+                    "turn_idx",
+                    F.lit(None).cast("string").alias("text"),
+                    "version",
+                    "dead",
+                )
+            )
+            sink = case.sink(
+                key_cols=("conv_id", "turn_idx"),
+                version_col="version",
+                tombstone_col="dead",
+            )
+            result = case.run(upserts.unionByName(tomb), sink)
     finally:
         fanout.unpersist()
-        shutil.rmtree(base, ignore_errors=True)
     return result.select("conv_id", "turn_idx", "text")
 
 
@@ -4252,9 +3957,6 @@ def q139_stream_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     per watermark-closed window through the exactly-once sink. The
     oracle replays the identical feed construction and brute-forces
     the matches in SQL under the same final-watermark predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.linkage import (
@@ -4278,23 +3980,19 @@ def q139_stream_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed.index * 5, unit="s"
     )
     feed["ts"] = feed["ts"].astype("datetime64[us]")
-    base = tempfile.mkdtemp(prefix="adt_q139_")
     try:
-        staged = _stage_append_log(feed, f"{base}/in", order_col="ts")
-        st = _stream_files(spark, staged, "mention string, ts timestamp")
-        matched = ed1_match_stream(st, catalog)
-        result = _run_stream_to_sink(spark, matched, base, shuffle_partitions=2)
+        with _stream_case(spark, "q139") as case:
+            st = case.stage(feed, "mention string, ts timestamp", order_col="ts")
+            matched = ed1_match_stream(st, catalog)
+            result = case.run(matched, shuffle_partitions=2)
     finally:
         catalog.unpersist()
-        shutil.rmtree(base, ignore_errors=True)
     # the established closed-window emission contract: compare only
     # windows the final watermark provably closed
-    import pandas as _pd
-
-    max_ts = _pd.Timestamp("2026-01-01") + _pd.to_timedelta(
+    max_ts = pd.Timestamp("2026-01-01") + pd.to_timedelta(
         (len(feed) - 1) * 5, unit="s"
     )
-    horizon = max_ts - _pd.Timedelta(seconds=30)
+    horizon = max_ts - pd.Timedelta(seconds=30)
     return result.filter(
         F.col("window_start") + F.expr("INTERVAL 1 MINUTE") <= F.lit(horizon)
     ).select("window_start", "mention", "matched_name", "dist")
@@ -4364,9 +4062,6 @@ def q142_stream_session_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (minus final turn — fully contained) plus a '_new' variant (text
     suffixed, disjoint fingerprints), arriving ts-ordered. Oracle
     replays the identical feed and the same closed-window predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.conversations import (
@@ -4382,7 +4077,7 @@ def q142_stream_session_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = tr.groupby("conv_id")["turn_idx"].transform("max")
     rl = tr[tr["turn_idx"] < mx].assign(conv_id=tr["conv_id"] + "_rl")
     new = tr.assign(conv_id=tr["conv_id"] + "_new", text=tr["text"] + " v2")
-    # no tie-break needed: _stage_append_log re-sorts by ts and the
+    # no tie-break needed: the staged append log re-sorts by ts and the
     # windowed rollup is equal-ts-arrival-order invariant
     feed = pd.concat([rl, new])[["conv_id", "text", "ts"]].reset_index(drop=True)
     feed["ts"] = feed["ts"].astype("datetime64[us]")
@@ -4394,17 +4089,17 @@ def q142_stream_session_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     idx = corpus_fingerprint_index(_transcripts(spark, sf_dir)).persist()
-    base = tempfile.mkdtemp(prefix="adt_q142_")
     try:
-        staged = _stage_append_log(feed, f"{base}/in", order_col="ts")
-        st = _stream_files(spark, staged, "conv_id string, text string, ts timestamp")
-        gated = turn_containment_stream(
-            st, threshold=0.8, index=idx, broadcast_index=True
-        )
-        result = _run_stream_to_sink(spark, gated, base, shuffle_partitions=8)
+        with _stream_case(spark, "q142") as case:
+            st = case.stage(
+                feed, "conv_id string, text string, ts timestamp", order_col="ts"
+            )
+            gated = turn_containment_stream(
+                st, threshold=0.8, index=idx, broadcast_index=True
+            )
+            result = case.run(gated, shuffle_partitions=8)
     finally:
         idx.unpersist()
-        shutil.rmtree(base, ignore_errors=True)
 
     horizon = pd.Timestamp(feed["ts"].max()) - pd.Timedelta(seconds=30)
     return result.filter(
@@ -4422,9 +4117,6 @@ def q146_stream_trajectory_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure higher-order-function projection: no second shuffle, no
     Python. Oracle replays the same feed with the gaps-and-islands /
     anti-join construction and the closed-window predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.trajectories import (
@@ -4437,18 +4129,14 @@ def q146_stream_trajectory_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["conv_id", "turn_idx", "role", "tool", "ts"]
     ]
     tr["ts"] = tr["ts"].astype("datetime64[us]")
-    base = tempfile.mkdtemp(prefix="adt_q146_")
-    try:
-        staged = _stage_append_log(tr, f"{base}/in", order_col="ts")
-        st = _stream_files(
-            spark,
-            staged,
+    with _stream_case(spark, "q146") as case:
+        st = case.stage(
+            tr,
             "conv_id string, turn_idx int, role string, tool string, ts timestamp",
+            order_col="ts",
         )
         gated = trajectory_gate_stream(st, loop_threshold=2)
-        result = _run_stream_to_sink(spark, gated, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        result = case.run(gated, shuffle_partitions=2)
 
     horizon = pd.Timestamp(tr["ts"].max()) - pd.Timedelta(seconds=30)
     return result.filter(
@@ -4465,9 +4153,6 @@ def q147_tool_latency_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink. Oracle replays the feed with join-based first-following-
     result and the same integer-microsecond arithmetic, plus the
     closed-window predicate."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.trajectories import (
@@ -4480,18 +4165,13 @@ def q147_tool_latency_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["conv_id", "turn_idx", "role", "tool", "ts"]
     ]
     tr["ts"] = tr["ts"].astype("datetime64[us]")
-    base = tempfile.mkdtemp(prefix="adt_q147_")
-    try:
-        staged = _stage_append_log(tr, f"{base}/in", order_col="ts")
-        st = _stream_files(
-            spark,
-            staged,
+    with _stream_case(spark, "q147") as case:
+        st = case.stage(
+            tr,
             "conv_id string, turn_idx int, role string, tool string, ts timestamp",
+            order_col="ts",
         )
-        mon = tool_latency_monitor(st)
-        result = _run_stream_to_sink(spark, mon, base, shuffle_partitions=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        result = case.run(tool_latency_monitor(st), shuffle_partitions=2)
 
     # the monitor's watermark advances with TOOL-BEARING turns (the
     # operator filters before the watermark node), so the closed-window
@@ -4534,9 +4214,6 @@ def q149_stream_conversation_windows(spark: SparkSession, sf_dir: str) -> DataFr
     micro-batches, exercising the cross-batch state carry. Oracle:
     the q148 twin with cap_trailing=False over the same feed (the
     stateful op emits every fed row; no watermark horizon)."""
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from auto_data_tokenize_spark.operators.conversations import (
@@ -4552,22 +4229,17 @@ def q149_stream_conversation_windows(spark: SparkSession, sf_dir: str) -> DataFr
     tr["_arr"] = tr["turn_idx"].astype("int64") * 10_000_000 + (
         tr["ts"].astype("int64") % 10_000_000
     )
-    base = tempfile.mkdtemp(prefix="adt_q149_")
-    try:
-        staged = _stage_append_log(tr, f"{base}/in", order_col="_arr")
-        st = _stream_files(
-            spark,
-            staged,
+    with _stream_case(spark, "q149") as case:
+        st = case.stage(
+            tr,
             "conv_id string, turn_idx int, role string, tool string, "
             "text string, ts timestamp, _arr long",
+            order_col="_arr",
         )
         wins = conversation_windows_stream(
             st.drop("_arr"), chunk_tokens=16, stride_tokens=8, state_buckets=32
         )
-        result = _run_stream_to_sink(spark, wins, base, shuffle_partitions=8)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return result
+        return case.run(wins, shuffle_partitions=8)
 
 
 def q150_assemble_windows(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,13 +36,11 @@ def run_to_sink(
     stream_df: DataFrame,
     sink: ExactlyOnceSink | AdmissionGate,
     checkpoint_dir: str,
-    output_mode: str = "append",
-    query_name: str = "adt",
     shuffle_partitions: int | None = None,
 ) -> list[dict]:
-    """Start the query, drain everything available, stop; return the
-    query's ``recentProgress`` records as plain dicts (read before
-    ``stop``), one per micro-batch (the last
+    """Start the append-mode query (named ``adt``), drain everything
+    available, stop; return the query's ``recentProgress`` records as
+    plain dicts (read before ``stop``), one per micro-batch (the last
     ``spark.sql.streaming.numRecentProgressUpdates`` of them, 100 by
     default). A failure inside a micro-batch
     propagates as Spark's ``StreamingQueryException`` carrying the
@@ -66,8 +64,8 @@ def run_to_sink(
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .queryName(query_name)
+            stream_df.writeStream.outputMode("append")
+            .queryName("adt")
             .option("checkpointLocation", checkpoint_dir)
             .foreachBatch(sink.foreach_batch)
             .start()

@@ -60,7 +60,7 @@ def test_stream_matches_batch_single_trigger(spark, det_small, tmp_path):
     st = spark.readStream.schema(schema).parquet(det_in)
     alerts = cep.escalation_alerts_stream(st, min_distinct=3)
     sink = ExactlyOnceSink(str(tmp_path / "out"))
-    pipeline.run_to_sink(alerts, sink, str(tmp_path / "ckpt"), output_mode="append")
+    pipeline.run_to_sink(alerts, sink, str(tmp_path / "ckpt"))
     got = (
         sink.read_committed(spark).orderBy("conv_id").toPandas()
     )

@@ -28,9 +28,9 @@ def stream_dir(sf_dir_small, tmp_path_factory):
     )
 
 
-def _run(spark, stream_df, tmp, name, mode="append"):
+def _run(spark, stream_df, tmp, name):
     sink = ExactlyOnceSink(f"{tmp}/{name}_out")
-    pipeline.run_to_sink(stream_df, sink, f"{tmp}/{name}_ckpt", output_mode=mode)
+    pipeline.run_to_sink(stream_df, sink, f"{tmp}/{name}_ckpt")
     return sink
 
 
