@@ -378,22 +378,29 @@ def cmd_csv_tokenize(args) -> int:
     from auto_data_tokenize_spark.operators.dlp_config import (
         apply_encrypt_config,
         parse_encrypt_config,
+        rewritten_columns,
     )
-    from auto_data_tokenize_spark.operators.ordering import cluster_sorted
+    from auto_data_tokenize_spark.operators.ordering import cluster_sorted_through
 
     args.sourceType = "CSV_FILE"  # forced, like makeCsvOptions()
     spark = get_spark("adt-csv-tokenize", cores=args.cores)
     df = _read_input(spark, args)
     rk = _root_key(args)
-    out = df
+    specs = []
     if args.dlpEncryptConfigJson:
         src = args.dlpEncryptConfigJson
         specs = parse_encrypt_config(
             json.loads(src) if src.lstrip().startswith("{") else src
         )
-        out = apply_encrypt_config(
-            out, specs, scope_col=args.scopeColumn, root_key=rk
+
+    def encrypt(d):
+        if not specs:
+            return d
+        return apply_encrypt_config(
+            d, specs, scope_col=args.scopeColumn, root_key=rk
         )
+
+    out = encrypt(df)
     if args.orderingColumns:
         try:
             keys = tuple(out.columns[int(i)] for i in args.orderingColumns)
@@ -407,7 +414,12 @@ def cmd_csv_tokenize(args) -> int:
         missing = [k for k in keys if k not in out.columns]
         if missing:
             raise SystemExit(f"ordering columns not in input: {missing}")
-        out = cluster_sorted(out, keys, num_partitions=args.csvFileShardCount)
+        # keys index the encrypted columns; the order is computed before
+        # the encrypt UDFs when no key is one they rewrite
+        out = cluster_sorted_through(
+            df, encrypt, keys, rewritten_columns(specs),
+            num_partitions=args.csvFileShardCount,
+        )
     else:
         out = out.repartition(args.csvFileShardCount)
     (

@@ -3,19 +3,26 @@ analogues, expressed as declarative DataFrame plans).
 
 Pipeline shape (pipeline/DlpInspectionPipeline.java:110-191 restated):
 
-    unpivot → detect (Arrow UDF) → explode → groupBy(column, infoType)
-    .count() → groupBy(column).collect_list → report
+    unpivot → sample → detect (Arrow UDF) → explode
+    → groupBy(column).count per infoType → report
 
 The reference shuffles four times (sample-per-key, batch, count,
-global group — SURVEY.md §3.1); here Catalyst plans a single exchange
-for the count (partial map-side aggregation first) plus a tiny
-single-partition agg for the report, and the detect stage is narrow.
+global group — SURVEY.md §3.1). ``column_report_from_values`` counts
+every infoType of a column in ONE aggregation keyed on the column
+(partial map-side aggregation first, so its exchange carries at most
+one row per column per map task), and the detect stage is narrow.
+With the sampler's window exchange and the report's single-partition
+agg, an inspect pass has three exchanges. ``column_infotype_counts`` +
+``column_report`` give the same counts in two steps, through
+(column, infoType) rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
+from auto_data_tokenize_spark.functions.detectors import INFO_TYPES
 from auto_data_tokenize_spark.functions.udfs import detect_spans_udf, info_types_udf
 
 
@@ -94,6 +101,41 @@ def column_report(counts: DataFrame) -> DataFrame:
         F.sort_array(
             F.collect_list(F.struct(F.col("info_type"), F.col("count")))
         ).alias("info_types")
+    )
+
+
+# ColumnInformation.info_types (proto:87-104), nullability included, as
+# ``column_report`` derives it from the exploded detector output
+_INFO_TYPE_COUNTS = ArrayType(
+    StructType([StructField("info_type", StringType()), StructField("count", LongType(), False)]),
+    containsNull=False,
+)
+
+
+def column_report_from_values(
+    values: DataFrame, info_types: tuple[str, ...] | None
+) -> DataFrame:
+    """``column_report`` of (column_name, value) rows, detected with
+    ``info_types`` (None = the default four), in one aggregation keyed
+    on ``column_name``: one ``count_if`` per infoType the detector can
+    report, then the non-zero counts as (info_type, count) structs in
+    infoType order. Columns with no findings are left out."""
+    types = sorted(set(info_types or INFO_TYPES))
+    found = values.select(
+        "column_name",
+        F.explode(info_types_udf(info_types)(F.col("value"))).alias("info_type"),
+    )
+    counts = found.groupBy("column_name").agg(
+        *[F.count_if(F.col("info_type") == t).alias(t) for t in types]
+    )
+    report = F.filter(
+        F.array(
+            *[F.struct(F.lit(t).alias("info_type"), F.col(t).alias("count")) for t in types]
+        ),
+        lambda s: s["count"] > 0,
+    ).cast(_INFO_TYPE_COUNTS)
+    return counts.select("column_name", report.alias("info_types")).filter(
+        F.size("info_types") > 0
     )
 
 

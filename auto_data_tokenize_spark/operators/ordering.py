@@ -9,10 +9,15 @@ reference needed a NATIVE BufferedExternalSorter for; we only choose
 - ``cluster_sorted``: range-repartition on the primary key then sort
   within partitions — total order across output files WITHOUT a
   single-reducer bottleneck; the scalable write path.
+- ``cluster_sorted_through``: ``cluster_sorted`` of a row-wise
+  transform's output, ordered BEFORE the transform when the keys allow
+  it, so the range-bounds sampling job never runs the transform.
 - ``globally_sorted``: plain ``orderBy`` for small golden comparisons.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
@@ -27,6 +32,36 @@ def cluster_sorted(
     else:
         ranged = df.repartitionByRange(*keys)
     return ranged.sortWithinPartitions(*keys)
+
+
+def cluster_sorted_through(
+    df: DataFrame,
+    transform: Callable[[DataFrame], DataFrame],
+    keys: tuple[str, ...],
+    rewritten: Iterable[str],
+    num_partitions: int | None,
+) -> DataFrame:
+    """``cluster_sorted(transform(df), keys, num_partitions)``.
+
+    ``repartitionByRange`` runs a job that samples range bounds from its
+    whole child plan, and the shuffle then computes that child again; a
+    Python UDF in ``transform`` would run twice per row. So when every
+    key is an input column that ``transform`` leaves as is (none is in
+    ``rewritten``, the columns it rewrites, renames or writes), the
+    order is computed first and the transform applied to the ordered
+    rows: ``transform(cluster_sorted(df, keys, num_partitions))``.
+
+    Both plans give the same rows in the same order provided
+    ``transform`` works row by row, is deterministic and keeps row order
+    (every tokenize/encrypt transform here does): the range bounds are
+    sampled from the same key values of the same input partitions.
+    Spark seeds that sample with the RDD id, so where the partitions are
+    cut varies from run to run for either plan; the concatenated order
+    does not. Otherwise (a key is missing from ``df`` or rewritten) the
+    transform runs first, as the key only exists after it."""
+    if set(keys) <= set(df.columns) and not set(keys) & set(rewritten):
+        return transform(cluster_sorted(df, keys, num_partitions))
+    return cluster_sorted(transform(df), keys, num_partitions)
 
 
 def globally_sorted(df: DataFrame, keys: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:

@@ -37,20 +37,7 @@ class InspectConfig:
 def inspect(df: DataFrame, cfg: InspectConfig) -> tuple[DataFrame, DataFrame]:
     """sample → identify → (column_report, inspection_report)."""
     sampled = sampler.sample_per_column(df, cfg.columns, n=cfg.sample_size)
-    from auto_data_tokenize_spark.functions.udfs import info_types_udf
-    from pyspark.sql import functions as F
-
-    counts = (
-        sampled.select(
-            "column_name",
-            F.explode(
-                info_types_udf(cfg.observable_info_types)(F.col("value"))
-            ).alias("info_type"),
-        )
-        .groupBy("column_name", "info_type")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-    col_report = identify.column_report(counts)
+    col_report = identify.column_report_from_values(sampled, cfg.observable_info_types)
     report = identify.inspection_report(
         col_report, cfg.source_type, cfg.input_pattern
     )
@@ -92,9 +79,20 @@ def tokenize_and_order(
     order_keys: tuple[str, ...] = ("conv_id", "turn_idx"),
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """encrypt → range-partitioned stable sort — the transcript query
-    the goldens assert on."""
-    return ordering.cluster_sorted(encrypt(df, cfg), order_keys, num_partitions)
+    """Range-partitioned stable sort on ``order_keys``, then encrypt —
+    the transcript query the goldens assert on. The rows and their order
+    are those of ``cluster_sorted(encrypt(df))``; ordering first keeps
+    the tokenize UDF out of the range-bounds sampling job, so it runs
+    once per row. When an order key is a column ``encrypt`` rewrites,
+    encrypt runs first (``ordering.cluster_sorted_through``)."""
+    rewritten = [
+        *cfg.free_form_columns,
+        *cfg.tokenize_columns,
+        *(f"encrypted_{c}" for c in cfg.tokenize_columns),
+    ]
+    return ordering.cluster_sorted_through(
+        df, lambda d: encrypt(d, cfg), order_keys, rewritten, num_partitions
+    )
 
 
 @dataclass
