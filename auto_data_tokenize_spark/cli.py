@@ -378,7 +378,6 @@ def cmd_csv_tokenize(args) -> int:
     from auto_data_tokenize_spark.operators.dlp_config import (
         apply_encrypt_config,
         parse_encrypt_config,
-        rewritten_columns,
     )
     from auto_data_tokenize_spark.operators.ordering import cluster_sorted_through
 
@@ -417,8 +416,7 @@ def cmd_csv_tokenize(args) -> int:
         # keys index the encrypted columns; the order is computed before
         # the encrypt UDFs when no key is one they rewrite
         out = cluster_sorted_through(
-            df, encrypt, keys, rewritten_columns(specs),
-            num_partitions=args.csvFileShardCount,
+            df, encrypt, keys, num_partitions=args.csvFileShardCount
         )
     else:
         out = out.repartition(args.csvFileShardCount)

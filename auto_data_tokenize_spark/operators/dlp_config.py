@@ -295,12 +295,6 @@ def apply_encrypt_config(
     return out.drop(*snap.values()) if snap else out
 
 
-def rewritten_columns(specs: list[TransformSpec]) -> set[str]:
-    """The top-level columns ``apply_encrypt_config`` rewrites in place
-    or writes under the ``encrypted_<name>`` rename."""
-    return {c for s in specs for c in (s.parts[0], f"encrypted_{s.parts[0]}")}
-
-
 def _tokenize_free_form_global(df, col, root_key, info_types):
     """Free-form tokenization under the single global key scope (the
     reference's one-keyset-per-run posture when no scope column is

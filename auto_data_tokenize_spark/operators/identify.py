@@ -12,9 +12,7 @@ every infoType of a column in ONE aggregation keyed on the column
 (partial map-side aggregation first, so its exchange carries at most
 one row per column per map task), and the detect stage is narrow.
 With the sampler's window exchange and the report's single-partition
-agg, an inspect pass has three exchanges. ``column_infotype_counts`` +
-``column_report`` give the same counts in two steps, through
-(column, infoType) rows.
+agg, an inspect pass has three exchanges.
 """
 
 from __future__ import annotations
@@ -94,18 +92,7 @@ def column_infotype_counts(
     )
 
 
-def column_report(counts: DataFrame) -> DataFrame:
-    """ColumnInformation rows (proto:87-104): per column, the list of
-    (info_type, count) sorted for determinism."""
-    return counts.groupBy("column_name").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("info_type"), F.col("count")))
-        ).alias("info_types")
-    )
-
-
-# ColumnInformation.info_types (proto:87-104), nullability included, as
-# ``column_report`` derives it from the exploded detector output
+# ColumnInformation.info_types (proto:87-104), nullability included
 _INFO_TYPE_COUNTS = ArrayType(
     StructType([StructField("info_type", StringType()), StructField("count", LongType(), False)]),
     containsNull=False,
@@ -115,8 +102,9 @@ _INFO_TYPE_COUNTS = ArrayType(
 def column_report_from_values(
     values: DataFrame, info_types: tuple[str, ...] | None
 ) -> DataFrame:
-    """``column_report`` of (column_name, value) rows, detected with
-    ``info_types`` (None = the default four), in one aggregation keyed
+    """ColumnInformation rows (proto:87-104) of (column_name, value)
+    rows, detected with ``info_types`` (None = the default four): per
+    column, the list of (info_type, count). One aggregation keyed
     on ``column_name``: one ``count_if`` per infoType the detector can
     report, then the non-zero counts as (info_type, count) structs in
     infoType order. Columns with no findings are left out."""

@@ -17,7 +17,7 @@ reference needed a NATIVE BufferedExternalSorter for; we only choose
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -34,11 +34,16 @@ def cluster_sorted(
     return ranged.sortWithinPartitions(*keys)
 
 
+def _attributes(df: DataFrame) -> dict[str, int]:
+    """Column name → exprId of the analyzed plan's output attributes."""
+    out = df._jdf.queryExecution().analyzed().output()
+    return {a.name(): a.exprId().id() for a in (out.apply(i) for i in range(out.size()))}
+
+
 def cluster_sorted_through(
     df: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
     keys: tuple[str, ...],
-    rewritten: Iterable[str],
     num_partitions: int | None,
 ) -> DataFrame:
     """``cluster_sorted(transform(df), keys, num_partitions)``.
@@ -46,10 +51,12 @@ def cluster_sorted_through(
     ``repartitionByRange`` runs a job that samples range bounds from its
     whole child plan, and the shuffle then computes that child again; a
     Python UDF in ``transform`` would run twice per row. So when every
-    key is an input column that ``transform`` leaves as is (none is in
-    ``rewritten``, the columns it rewrites, renames or writes), the
-    order is computed first and the transform applied to the ordered
-    rows: ``transform(cluster_sorted(df, keys, num_partitions))``.
+    key is an input column that ``transform`` passes through untouched
+    (its output exposes the same analyzed attribute, same exprId, as
+    ``df``), the order is computed first and the transform applied to
+    the ordered rows: ``transform(cluster_sorted(df, keys,
+    num_partitions))``. A column the transform rewrites, renames or
+    writes gets a new exprId, so no list of such columns is kept.
 
     Both plans give the same rows in the same order provided
     ``transform`` works row by row, is deterministic and keeps row order
@@ -57,11 +64,13 @@ def cluster_sorted_through(
     sampled from the same key values of the same input partitions.
     Spark seeds that sample with the RDD id, so where the partitions are
     cut varies from run to run for either plan; the concatenated order
-    does not. Otherwise (a key is missing from ``df`` or rewritten) the
-    transform runs first, as the key only exists after it."""
-    if set(keys) <= set(df.columns) and not set(keys) & set(rewritten):
+    does not. Otherwise (a key is missing from ``df`` or not passed
+    through) the transform runs first, as the key only exists after it."""
+    out = transform(df)
+    before, after = _attributes(df), _attributes(out)
+    if all(k in before and after.get(k) == before[k] for k in keys):
         return transform(cluster_sorted(df, keys, num_partitions))
-    return cluster_sorted(transform(df), keys, num_partitions)
+    return cluster_sorted(out, keys, num_partitions)
 
 
 def globally_sorted(df: DataFrame, keys: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:

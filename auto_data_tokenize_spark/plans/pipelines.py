@@ -85,13 +85,8 @@ def tokenize_and_order(
     the tokenize UDF out of the range-bounds sampling job, so it runs
     once per row. When an order key is a column ``encrypt`` rewrites,
     encrypt runs first (``ordering.cluster_sorted_through``)."""
-    rewritten = [
-        *cfg.free_form_columns,
-        *cfg.tokenize_columns,
-        *(f"encrypted_{c}" for c in cfg.tokenize_columns),
-    ]
     return ordering.cluster_sorted_through(
-        df, lambda d: encrypt(d, cfg), order_keys, rewritten, num_partitions
+        df, lambda d: encrypt(d, cfg), order_keys, num_partitions
     )
 
 

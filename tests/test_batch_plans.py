@@ -138,36 +138,56 @@ def test_cluster_sorted_through_a_renamed_key(spark, turns):
     def enc(d):
         return tokenize.tokenize_columns(d, ["conv_id"])
 
-    got = ordering.cluster_sorted_through(turns, enc, keys, [], 3)
+    got = ordering.cluster_sorted_through(turns, enc, keys, 3)
     _assert_same_partitions(spark, got, ordering.cluster_sorted(enc(turns), keys, 3))
 
 
-def test_cli_csv_tokenize_orders_by_an_encrypted_column(spark, turns_pdf, tmp_path, capsys):
+def test_cluster_sorted_through_a_key_the_transform_overwrites(spark, turns):
+    """No caller lists the columns its transform writes: a key column
+    replaced in place is seen in the plan, and the order is taken from
+    the new values."""
+
+    def flip(d):
+        return d.withColumn("turn_idx", -F.col("turn_idx"))
+
+    got = ordering.cluster_sorted_through(turns, flip, KEYS, 3)
+    _assert_same_partitions(spark, got, ordering.cluster_sorted(flip(turns), KEYS, 3))
+
+
+@pytest.mark.parametrize(
+    "transform, keys",
+    [
+        # a key the config renames: encrypt runs first
+        ({"columnId": "$.CsvRecord.conv_id"}, ("encrypted_conv_id", "turn_idx")),
+        # keys the config leaves as is: ordered first, then tokenized
+        ({"columnId": "$.CsvRecord.text", "freeFormColumn": "true"}, KEYS),
+    ],
+)
+def test_cli_csv_tokenize_orders_by_an_encrypted_column(
+    spark, turns_pdf, tmp_path, capsys, transform, keys
+):
     src = tmp_path / "chats.csv"
     turns_pdf.drop(columns=["ts"]).to_csv(src, index=False)
     out_dir = tmp_path / "out"
-    cfg = json.dumps({"transforms": [{"columnId": "$.CsvRecord.conv_id"}]})
+    cfg = json.dumps({"transforms": [transform]})
     rc = main([
         "csv-tokenize",
         f"--inputPattern={src}",
         "--csvFirstRowHeader",
         f"--dlpEncryptConfigJson={cfg}",
-        "--orderingColumnNames=encrypted_conv_id,turn_idx",
+        f"--orderingColumnNames={','.join(keys)}",
         f"--outputDirectory={out_dir}",
         "--csvFileShardCount=3",
     ])
     assert rc == 0
-    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["ordered_by"] == [
-        "encrypted_conv_id",
-        "turn_idx",
-    ]
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["ordered_by"] == list(keys)
     shards = sorted(out_dir.glob("part-*.csv"))
     assert len(shards) == 3
     # the CSV source reads every column as a string: turn_idx orders as text
     got = pd.concat([pd.read_csv(s, dtype=str) for s in shards], ignore_index=True)
     assert len(got) == len(turns_pdf)
-    keys = list(zip(got["encrypted_conv_id"], got["turn_idx"]))
-    assert keys == sorted(keys)
+    got_keys = list(zip(*(got[k] for k in keys)))
+    assert got_keys == sorted(got_keys)
 
 
 # -- sample_per_column ----------------------------------------------------

@@ -8,14 +8,14 @@ import pytest
 from auto_data_tokenize_spark.functions import value_tokenizer as vt
 from auto_data_tokenize_spark.operators import report_io
 from auto_data_tokenize_spark.operators.identify import (
-    column_infotype_counts,
-    column_report,
+    column_report_from_values,
     inspection_report,
+    unpivot_columns,
 )
 
 
 def test_write_column_reports_layout(spark, transcripts_small, tmp_path):
-    rep = column_report(column_infotype_counts(transcripts_small, ["text"]))
+    rep = column_report_from_values(unpivot_columns(transcripts_small, ["text"]), None)
     paths = report_io.write_column_reports(rep, str(tmp_path))
     # reference naming: col-<sanitized> + Beam's -00000-of-00001 shard
     assert [os.path.basename(p) for p in paths] == [
@@ -118,7 +118,7 @@ def test_schema_file_avro_mode_reference_parity(spark, transcripts_small, tmp_pa
 
 def test_inspection_report_shape(spark, transcripts_small):
     rep = inspection_report(
-        column_report(column_infotype_counts(transcripts_small, ["text"])),
+        column_report_from_values(unpivot_columns(transcripts_small, ["text"]), None),
         "PARQUET", "/data/transcripts/*.parquet",
     )
     row = rep.collect()[0]
