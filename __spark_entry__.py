@@ -1350,12 +1350,10 @@ def q28_stream_escalation_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
         st = spark.readStream.schema(schema).parquet(det_in)
-        # bucketed state (the q149 pattern): ~19k live conversations per
-        # batch would otherwise each pay a Python group invocation + a
-        # state-store row write per micro-batch — measured 17.6 s vs 2.9 s
-        # at sf0.1 (OPTIMIZATION_r06.md); 8 state partitions sized to
-        # state volume, not cores (the q26 rationale)
-        alerts = escalation_alerts_stream(st, min_distinct=3, state_buckets=8)
+        # the operator keys its state on 8 conv_id hash buckets, so 8
+        # shuffle partitions match the state volume, not the cores (the
+        # q26 rationale)
+        alerts = escalation_alerts_stream(st, min_distinct=3)
         return case.run(alerts, shuffle_partitions=8)
 
 
@@ -1502,7 +1500,7 @@ def q64_l_diversity_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity per equivalence class: quasi-identifiers
     (c_mktsegment, c_nationkey), sensitive attribute = account balance
     generalized to 1000-unit bands. Exact distinct (matches the SQL
-    twin); approx_count_distinct is the documented 100 TB alternative."""
+    twin)."""
     from auto_data_tokenize_spark.operators.risk import l_diversity
 
     cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
@@ -4237,7 +4235,7 @@ def q149_stream_conversation_windows(spark: SparkSession, sf_dir: str) -> DataFr
             order_col="_arr",
         )
         wins = conversation_windows_stream(
-            st.drop("_arr"), chunk_tokens=16, stride_tokens=8, state_buckets=32
+            st.drop("_arr"), chunk_tokens=16, stride_tokens=8
         )
         return case.run(wins, shuffle_partitions=8)
 

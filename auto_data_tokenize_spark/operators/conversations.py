@@ -307,9 +307,9 @@ def loss_mask_spans(
     Output: (conv_id, turn_idx, role, n_piece_tokens, tok_start,
     tok_end, trainable) — [tok_start, tok_end) are whitespace-token
     positions inside :func:`render_chat`'s document for the same
-    conversation. The invariant that makes span arithmetic exact:
-    every template piece ``<|role|>text`` starts with a non-whitespace
-    header glyph and pieces join on ``\\n``, so every maximal
+    conversation. Span arithmetic stays exact because every template
+    piece ``<|role|>text`` starts with a non-whitespace header glyph
+    and pieces join on ``\\n``, so every maximal
     non-whitespace run of the rendered document lies inside exactly
     one piece — piece token counts sum to the document count plus the
     final ``<|end|>`` token, with no boundary merging, for any text
@@ -394,6 +394,12 @@ def duckdb_loss_mask_sql(
 
 
 _LONG_MIN = -(2**63)
+
+#: State key count of ``conversation_windows_stream``. A constant, not
+#: an option: the checkpointed state is keyed by bucket, so a count
+#: that changed across a restart would look conversations up in the
+#: wrong bucket.
+WINDOW_STATE_BUCKETS = 32
 
 
 def _validate_chunk_stride(chunk_tokens: int, stride_tokens: int) -> tuple[int, int]:
@@ -693,8 +699,6 @@ def conversation_windows_stream(
     trainable_role: str = "agent",
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
-    state_timeout_ms: int | None = None,
-    state_buckets: int | None = None,
 ):
     """Live SFT window assembly — the streaming twin of
     :func:`conversation_windows`: per-conversation token offsets
@@ -732,38 +736,24 @@ def conversation_windows_stream(
     step; Python only does the offset cumsum), so stream and batch
     cannot diverge on tokenization or assignment.
 
-    Scale: state is two longs per conversation; one shuffle on
-    ``conv_col`` per micro-batch; the fan-out is pure codegen after
-    the stateful step. State lives for the stream's lifetime under
-    the default ``state_timeout_ms=None`` (NoTimeout — right for
-    finite/append-log runs and the exactly-once harness); for a
-    forever-stream over short-lived conversations pass an idle
-    ``state_timeout_ms`` so closed conversations evict
-    (ProcessingTimeTimeout) — a turn arriving after eviction restarts
-    its conversation's offsets at 0, the documented
-    late-after-close tradeoff.
-
-    ``state_buckets``: the per-conversation state key means one
-    Python-side group invocation per LIVE CONVERSATION per
-    micro-batch — measured dominant when thousands of conversations
-    interleave in every batch (the realistic arrival shape). Setting
-    ``state_buckets=N`` keys the state on ``xxhash64(conv) % N``
-    instead: per batch the operator runs N vectorized invocations,
-    each carrying its bucket's ``conv -> (offset, high-water)`` map
-    as three parallel state arrays, and the per-turn cumsum/violation
-    scan is a pandas groupby transform (no Python row loop). Output
-    is IDENTICAL to the per-conversation mode (pinned by test).
-    Trade-off: ``state_timeout_ms`` then evicts only whole IDLE
-    buckets, so use bucketing for throughput and per-conversation
-    keys when fine-grained eviction matters.
+    Scale: state is two longs per conversation, keyed on
+    ``xxhash64(conv) % WINDOW_STATE_BUCKETS`` rather than on the
+    conversation, so each micro-batch runs one vectorized Python
+    invocation per bucket instead of one per LIVE CONVERSATION (the
+    cost that dominates when thousands of conversations interleave in
+    every batch, the realistic arrival shape). Each bucket carries its
+    ``conv -> (offset, high-water)`` map as parallel state arrays, and
+    the per-turn cumsum/violation scan is a pandas groupby transform
+    (no Python row loop). One shuffle on the bucket per micro-batch;
+    the fan-out is pure codegen after the stateful step. State has no
+    timeout: it lives for the stream's lifetime, which suits the
+    finite append-log runs and the exactly-once harness.
     """
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     ch, st = _validate_chunk_stride(chunk_tokens, stride_tokens)
-    if state_buckets is not None and state_buckets < 1:
-        raise ValueError(f"state_buckets must be >= 1, got {state_buckets}")
     pieces = (
         turns_stream.select(
             conv_col,
@@ -778,11 +768,6 @@ def conversation_windows_stream(
         f"{conv_col} string, {idx_col} long, role string, "
         "tok_start long, tok_end long"
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
     def _assign(rows, off_of, hi_of):
         """Vectorized span assignment over a (possibly multi-conv)
@@ -794,8 +779,7 @@ def conversation_windows_stream(
         the carried offset plus the accepted-row running sum. NULL
         conv_id is a real group (``dropna=False`` everywhere; pandas
         surfaces its key as NaN, normalized back to ``None`` so state
-        lookups round-trip) — the scalar mode's ``groupBy(conv)``
-        keeps the NULL key too, so the modes stay identical on it.
+        lookups round-trip), just as a ``groupBy(conv)`` would keep it.
         Returns (out_frame, new_off: dict, new_hi: dict)."""
         rows = rows.sort_values(
             [conv_col, idx_col, "_n_piece", "role"], kind="stable"
@@ -841,94 +825,35 @@ def conversation_windows_stream(
         )
         return out, new_off, new_hi
 
-    if state_buckets is None:
-        # scalar fast path: a single-conversation frame is a handful
-        # of rows, where the vectorized groupby machinery costs more
-        # than a plain loop (pinned equal to the bucketed/vectorized
-        # path by test_conversation_windows_stream_carry_and_quarantine)
-
-        def fn(key, pdfs, state: GroupState):
-            if state_timeout_ms is not None and state.hasTimedOut:
-                state.remove()
-                return
-            off, last = state.get if state.exists else (0, _LONG_MIN)
-            frames = [p for p in pdfs if len(p)]
-            if frames:
-                rows = (
-                    pd.concat(frames)
-                    .sort_values(  # same content tie-break as _assign
-                        [idx_col, "_n_piece", "role"], kind="stable"
-                    )
-                    .reset_index(drop=True)
-                )
-                idx = rows[idx_col].astype("Int64")
-                npi = rows["_n_piece"].astype("int64").to_numpy()
-                starts: list = []
-                ends: list = []
-                o, hi = int(off), int(last)
-                for i, idx_i in enumerate(idx):
-                    if idx_i is pd.NA or int(idx_i) <= hi:
-                        starts.append(None)  # unorderable -> quarantine
-                        ends.append(None)
-                    else:
-                        starts.append(o)
-                        o += int(npi[i])
-                        ends.append(o)
-                        hi = int(idx_i)
-                state.update((int(o), int(hi)))
-                yield pd.DataFrame(
-                    {
-                        conv_col: key[0],
-                        idx_col: idx,
-                        "role": rows["role"].to_numpy(),
-                        "tok_start": pd.array(starts, dtype="Int64"),
-                        "tok_end": pd.array(ends, dtype="Int64"),
-                    }
-                )
-            else:
-                state.update((int(off), int(last)))
-            if state_timeout_ms is not None:
-                state.setTimeoutDuration(int(state_timeout_ms))
-
-        spans = pieces.groupBy(conv_col).applyInPandasWithState(
-            fn, out_schema, "off long, last long", "append", timeout
+    def fn(key, pdfs, state: GroupState):
+        convs, offs, his = state.get if state.exists else ([], [], [])
+        off_of = dict(zip(convs, offs))
+        hi_of = dict(zip(convs, his))
+        frames = [p.drop(columns=["_bkt"]) for p in pdfs if len(p)]
+        if frames:
+            out, new_off, new_hi = _assign(pd.concat(frames), off_of, hi_of)
+            off_of.update(new_off)
+            hi_of.update(new_hi)
+            yield out
+        ks = list(off_of)
+        state.update(
+            (ks, [int(off_of[k]) for k in ks], [int(hi_of[k]) for k in ks])
         )
-    else:
 
-        def fn_bucket(key, pdfs, state: GroupState):
-            if state_timeout_ms is not None and state.hasTimedOut:
-                state.remove()
-                return
-            if state.exists:
-                convs, offs, his = state.get
-                off_of = dict(zip(convs, offs))
-                hi_of = dict(zip(convs, his))
-            else:
-                off_of, hi_of = {}, {}
-            frames = [p.drop(columns=["_bkt"]) for p in pdfs if len(p)]
-            if frames:
-                out, new_off, new_hi = _assign(pd.concat(frames), off_of, hi_of)
-                off_of.update(new_off)
-                hi_of.update(new_hi)
-                yield out
-            ks = list(off_of)
-            state.update(
-                (ks, [int(off_of[k]) for k in ks], [int(hi_of[k]) for k in ks])
-            )
-            if state_timeout_ms is not None:
-                state.setTimeoutDuration(int(state_timeout_ms))
-
-        bucketed = pieces.withColumn(
+    spans = (
+        pieces.withColumn(
             "_bkt",
-            F.pmod(F.xxhash64(F.col(conv_col)), F.lit(int(state_buckets))),
+            F.pmod(F.xxhash64(F.col(conv_col)), F.lit(WINDOW_STATE_BUCKETS)),
         )
-        spans = bucketed.groupBy("_bkt").applyInPandasWithState(
-            fn_bucket,
+        .groupBy("_bkt")
+        .applyInPandasWithState(
+            fn,
             out_schema,
             "convs array<string>, offs array<long>, his array<long>",
             "append",
-            timeout,
+            GroupStateTimeout.NoTimeout,
         )
+    )
     w_max = F.expr(f"tok_start div {st}")  # no W_last cap mid-stream
     return _fan_out_windows(
         spans.withColumn(

@@ -4,7 +4,7 @@ counterpart — the reference dedupes nothing).
 
 Portability design: both signature families are cross-engine
 reproducible, so the correctness gate literally recomputes them in
-DuckDB. MinHash (default ``affine32`` mode) hashes each shingle ONCE
+DuckDB. MinHash hashes each shingle ONCE
 (first 8 hex chars of md5 as an integer, reduced mod the Mersenne
 prime 2^31-1) and derives the 64 per-permutation values with universal
 affine hashes ``(a_j*h + b_j) mod p`` — textbook one-hash minhash
@@ -55,8 +55,17 @@ from pyspark.sql.types import LongType, StructField, StructType
 # a_j*h + b_j < 2^62 + 2^31 — no signed-64 overflow on either engine.
 MINHASH_P = 2_147_483_647
 
+# One MinHash geometry for every signature and band table: 64
+# permutations cut into 16 LSH bands of 4 rows. Constants, not options:
+# band keys do not record the geometry they were cut at, so tables
+# built at two geometries would never collide.
+N_HASHES = 64
+BANDS = 16
+ROWS_PER_BAND = 4
+assert N_HASHES >= BANDS * ROWS_PER_BAND
 
-def _affine_coeffs(n_hashes: int = 64) -> list[tuple[int, int]]:
+
+def _affine_coeffs(n_hashes: int = N_HASHES) -> list[tuple[int, int]]:
     """Deterministic (a_j, b_j) pairs for the universal-hash minhash
     permutations, a_j ∈ [1, p), b_j ∈ [0, p). Fixed seed: signatures
     must be stable across sessions/engines (the DuckDB oracle embeds
@@ -137,24 +146,15 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    n_hashes: int = 64,
-    hash_mode: str = "affine32",
 ) -> DataFrame:
     """(id, sig) — sig[j] = min over shingles of the j-th permutation
-    hash of the shingle.
+    hash of the shingle: ONE md5 per shingle → integer h mod 2^31-1,
+    then ``N_HASHES`` universal affine permutations ``(a_j*h + b_j) mod
+    p`` — pure codegen'd int64 arithmetic, ~64× less hash work than
+    hashing per (j, shingle), and the DuckDB oracle recomputes it
+    verbatim (the round-2 q14 regression fix).
 
-    ``hash_mode='affine32'`` (default): ONE md5 per shingle → integer
-    h mod 2^31-1, then ``n_hashes`` universal affine permutations
-    ``(a_j*h + b_j) mod p`` — pure codegen'd int64 arithmetic, ~64×
-    less hash work than hashing per (j, shingle), and the DuckDB
-    oracle recomputes it verbatim (the round-2 q14 regression fix).
-    ``hash_mode='md5'``: legacy 32-hex-string minima, one full md5 per
-    (j, shingle) — kept for comparison/compat.
-    ``hash_mode='xxhash64'``: native per-(j, shingle) xxhash64 longs.
-    Same LSH banding works on any mode (band key md5s the stringified
-    slice).
-
-    Shape: explode shingles → base-hash projection → ``n_hashes``
+    Shape: explode shingles → base-hash projection → ``N_HASHES``
     min-aggregates per doc → reassemble the sig array. Chosen over a
     higher-order-function (transform/array_min lambda) formulation for
     the same two measured reasons as ``simhash_cols``: HOF lambdas are
@@ -177,32 +177,14 @@ def minhash_signatures(
     sh = word_shingles(df, text_col, k).select(
         F.col(id_col), F.explode_outer("shingles").alias("_s")
     ).where(F.col("_s").isNotNull())
-    if hash_mode == "affine32":
-        hashed = sh.select(id_col, F.expr(_spark_base_hash("_s")).alias("_h"))
-        aggs = [
-            F.min(F.expr(f"({a} * _h + {b}) % {MINHASH_P}")).alias(f"_m{j}")
-            for j, (a, b) in enumerate(_affine_coeffs(n_hashes))
-        ]
-        g = hashed.groupBy(id_col).agg(*aggs)
-    elif hash_mode == "md5":
-        g = sh.groupBy(id_col).agg(
-            *[
-                F.min(F.md5(F.concat(F.lit(f"{j}|"), F.col("_s")))).alias(f"_m{j}")
-                for j in range(n_hashes)
-            ]
-        )
-    elif hash_mode == "xxhash64":
-        g = sh.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64(F.lit(j), F.col("_s"))).alias(f"_m{j}")
-                for j in range(n_hashes)
-            ]
-        )
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
-    return g.select(
+    hashed = sh.select(id_col, F.expr(_spark_base_hash("_s")).alias("_h"))
+    aggs = [
+        F.min(F.expr(f"({a} * _h + {b}) % {MINHASH_P}")).alias(f"_m{j}")
+        for j, (a, b) in enumerate(_affine_coeffs())
+    ]
+    return hashed.groupBy(id_col).agg(*aggs).select(
         F.col(id_col),
-        F.array(*[F.col(f"_m{j}") for j in range(n_hashes)]).alias("sig"),
+        F.array(*[F.col(f"_m{j}") for j in range(N_HASHES)]).alias("sig"),
     )
 
 
@@ -211,7 +193,6 @@ def minhash_signatures_rowwise(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    n_hashes: int = 64,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Row-local signature variant for STREAMING sides: identical
@@ -245,7 +226,7 @@ def minhash_signatures_rowwise(
     )
     mins = [
         F.expr(f"array_min(transform(_hs, h -> ({a} * h + {b}) % {MINHASH_P}))")
-        for a, b in _affine_coeffs(n_hashes)
+        for a, b in _affine_coeffs()
     ]
     # NULL-text contract (matches the batch path, where such docs emit
     # no signature row): a projection cannot drop rows, so the sig is
@@ -277,10 +258,6 @@ class NearDupGate:
     (:func:`banded_keys` over the corpus signatures — at real scale a
     precomputed, bucketed table). A batch band table is persisted for
     the life of the gate; a streaming one is not.
-    The corpus signatures MUST use the default ``affine32`` hash mode:
-    the stream side computes affine32 only, and band keys from a
-    different family never collide — the failure is silent zero recall,
-    not an error (band keys don't carry their family).
 
     Plan shape (``apply``): repartition the micro-batch across all
     cores (stateless streaming DataFrames support repartition; the
@@ -297,16 +274,10 @@ class NearDupGate:
         id_col: str = "doc_id",
         text_col: str = "text",
         k: int = 5,
-        n_hashes: int = 64,
-        bands: int = 16,
-        rows_per_band: int = 4,
     ):
         self.id_col = id_col
         self.text_col = text_col
         self.k = k
-        self.n_hashes = n_hashes
-        self.bands = bands
-        self.rows_per_band = rows_per_band
         corpus_keys = corpus_banded.select("band_idx", "band_key").distinct()
         self._persisted = not corpus_banded.isStreaming
         if self._persisted:
@@ -316,10 +287,8 @@ class NearDupGate:
     def apply(self, incoming: DataFrame) -> DataFrame:
         parallelism = incoming.sparkSession.sparkContext.defaultParallelism
         incoming = incoming.repartition(parallelism)
-        sig = minhash_signatures_rowwise(
-            incoming, self.id_col, self.text_col, self.k, self.n_hashes
-        )
-        stream_banded = banded_keys(sig, self.id_col, self.bands, self.rows_per_band)
+        sig = minhash_signatures_rowwise(incoming, self.id_col, self.text_col, self.k)
+        stream_banded = banded_keys(sig, self.id_col)
         return stream_banded.join(
             self.corpus_keys, ["band_idx", "band_key"], "left_semi"
         )
@@ -336,33 +305,14 @@ class NearDupGate:
         self.close()
 
 
-def near_dup_gate(
-    incoming: DataFrame,
-    corpus_banded: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    n_hashes: int = 64,
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """One-shot functional form of :class:`NearDupGate`. NOTE: a batch
-    corpus band set stays pinned until the session ends — prefer the
-    class (context manager) when the gate has a bounded lifetime."""
-    return NearDupGate(
-        corpus_banded, id_col, text_col, k, n_hashes, bands, rows_per_band
-    ).apply(incoming)
-
-
 def banded_keys(
     sig_df: DataFrame,
     id_col: str = "doc_id",
-    bands: int = 16,
-    rows_per_band: int = 4,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, band_idx, band_key) — one row per LSH band; band_key =
-    md5 over the band's signature slice. Shared by the batch candidate
+    """(id, band_idx, band_key) — one row per LSH band (``BANDS`` of
+    them); band_key = md5 over the band's ``ROWS_PER_BAND``-long
+    signature slice. Shared by the batch candidate
     join and the streaming ingest gate (the key construction must be
     identical on both sides of any band join).
 
@@ -387,10 +337,10 @@ def banded_keys(
         *[F.col(c) for c in extra_cols],
         F.explode_outer(
             F.expr(
-                f"transform(sequence(0, {bands - 1}),"
+                f"transform(sequence(0, {BANDS - 1}),"
                 f" b -> struct(b as band_idx,"
-                f" md5(concat_ws(',', transform(slice(sig, b * {rows_per_band} + 1,"
-                f" {rows_per_band}), x -> cast(x as string)))) as band_key))"
+                f" md5(concat_ws(',', transform(slice(sig, b * {ROWS_PER_BAND} + 1,"
+                f" {ROWS_PER_BAND}), x -> cast(x as string)))) as band_key))"
             )
         ).alias("bk"),
     ).select("id", *extra_cols, "bk.band_idx", "bk.band_key")
@@ -399,13 +349,11 @@ def banded_keys(
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str = "doc_id",
-    bands: int = 16,
-    rows_per_band: int = 4,
     max_bucket: int = 64,
 ) -> DataFrame:
     """Band the signatures, bucket-join, emit candidate (a, b) pairs
     with a < b. One shuffle on the banded key."""
-    banded = banded_keys(sig_df, id_col, bands, rows_per_band)
+    banded = banded_keys(sig_df, id_col)
 
     # cap pathological buckets before the quadratic self-join
     bucket_sizes = banded.groupBy("band_idx", "band_key").agg(
@@ -431,18 +379,15 @@ def minhash_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    n_hashes: int = 64,
-    bands: int = 16,
     threshold: float = 0.7,
-    hash_mode: str = "affine32",
 ) -> DataFrame:
     """Full near-dup pipeline: signatures → LSH candidates → exact
     verify → survivors. A doc is a duplicate if a *smaller-id* similar
     doc exists (greedy, deterministic; full connected components would
     need iteration — out of scope for one pass).
     Output: (doc_id, dup_of nullable)."""
-    sig = minhash_signatures(df, id_col, text_col, k, n_hashes, hash_mode)
-    pairs = lsh_candidate_pairs(sig, id_col, bands, n_hashes // bands)
+    sig = minhash_signatures(df, id_col, text_col, k)
+    pairs = lsh_candidate_pairs(sig, id_col)
     # verify with shingle-set Jaccard — the quantity MinHash estimates
     # (word-set Jaccard degenerates on small-vocabulary corpora)
     dup_pairs = ngram_jaccard_pairs(df, pairs, id_col, text_col, n=k).filter(
@@ -854,8 +799,6 @@ def dup_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    n_hashes: int = 64,
-    bands: int = 16,
     threshold: float = 0.7,
 ) -> DataFrame:
     """Full duplicate-cluster assignment: LSH candidates → exact
@@ -865,8 +808,8 @@ def dup_clusters(
     A and C themselves fall below the threshold — which is what a
     keep-one-per-cluster training-data dedup actually needs.
     Output: (id_col, cluster_id); singletons get their own id."""
-    sig = minhash_signatures(df, id_col, text_col, k, n_hashes)
-    pairs = lsh_candidate_pairs(sig, id_col, bands, n_hashes // bands)
+    sig = minhash_signatures(df, id_col, text_col, k)
+    pairs = lsh_candidate_pairs(sig, id_col)
     verified = ngram_jaccard_pairs(df, pairs, id_col, text_col, n=k).filter(
         F.col("jaccard") >= threshold
     )

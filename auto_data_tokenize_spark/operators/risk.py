@@ -28,9 +28,7 @@ aggregation; the quasi-identifier tuple is the shuffle key — no
 skew-prone global collects). k-map and delta-presence aggregate BOTH
 sides to class granularity before joining, so the join moves only
 (distinct QI tuples) rows, never raw records. ``count_distinct``
-inside the class groupBy is exact, matching the SQL oracle; at 100 TB
-swap ``approx_count_distinct`` via ``exact=False`` when
-estimate-grade l-diversity is acceptable.
+inside the class groupBy is exact, matching the SQL oracle.
 """
 
 from __future__ import annotations
@@ -87,20 +85,16 @@ def l_diversity(
     df: DataFrame,
     qi_cols: list[str],
     sensitive_col: str,
-    exact: bool = True,
 ) -> DataFrame:
     """Per equivalence class: ``qi_cols..., class_size,
     distinct_sensitive``. The table is l-diverse iff
     ``min(distinct_sensitive) >= l``."""
     _check_cols(df, qi_cols + [sensitive_col])
-    distinct = (
-        F.count_distinct(F.col(sensitive_col))
-        if exact
-        else F.approx_count_distinct(F.col(sensitive_col))
-    )
     return df.groupBy(*qi_cols).agg(
         F.count(F.lit(1)).alias("class_size"),
-        distinct.cast("long").alias("distinct_sensitive"),
+        F.count_distinct(F.col(sensitive_col))
+        .cast("long")
+        .alias("distinct_sensitive"),
     )
 
 
@@ -339,11 +333,10 @@ def l_diversity_histogram(
     df: DataFrame,
     qi_cols: list[str],
     sensitive_col: str,
-    exact: bool = True,
 ) -> DataFrame:
     """How many classes exist at each sensitive-value diversity level:
     ``distinct_sensitive, num_classes, num_records``."""
-    classes = l_diversity(df, qi_cols, sensitive_col, exact=exact)
+    classes = l_diversity(df, qi_cols, sensitive_col)
     return classes.groupBy("distinct_sensitive").agg(
         F.count(F.lit(1)).alias("num_classes"),
         F.sum("class_size").cast("long").alias("num_records"),

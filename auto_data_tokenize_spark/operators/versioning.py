@@ -189,11 +189,7 @@ def incremental_band_index(
     new_snapshot: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bands: int = 16,
-    rows_per_band: int = 4,
     k: int = 5,
-    n_hashes: int = 64,
-    hash_mode: str = "affine32",
 ) -> DataFrame:
     """Maintain a persisted MinHash/LSH band index under a snapshot
     delta: drop the bands of removed/changed documents, compute bands
@@ -206,18 +202,11 @@ def incremental_band_index(
 
     ``old_index`` must be a band index over the OLD snapshot in
     :func:`~auto_data_tokenize_spark.operators.dedup.banded_keys`
-    shape ``(id, band_idx, band_key)`` built with the SAME signature
-    geometry as passed here — (bands, rows_per_band) AND the
-    ``minhash_signatures`` parameters (k, n_hashes, hash_mode); the
-    geometry cannot be recovered from the index rows, so a mismatch
-    (e.g. an n_hashes=128 index maintained at the default 64) would
-    silently produce bands that never match the kept remainder.
-    ``n_hashes`` must cover ``bands * rows_per_band`` (a short
-    signature would give every doc identical md5('') keys in the
-    uncovered bands). ``delta`` is :func:`corpus_delta` output over
-    (the old snapshot, ``new_snapshot``) whose content columns cover
-    ``text_col`` (a delta that ignores the text would miss re-banding
-    work).
+    shape ``(id, band_idx, band_key)`` built with the same shingle
+    width ``k`` as passed here. ``delta`` is :func:`corpus_delta`
+    output over (the old snapshot, ``new_snapshot``) whose content
+    columns cover ``text_col`` (a delta that ignores the text would
+    miss re-banding work).
 
     Both joins use the SAME undifferentiated delta id projection — no
     status split needed, because 'added' ids are absent from the old
@@ -245,11 +234,6 @@ def incremental_band_index(
         raise ValueError(
             f"old_index is not banded_keys output (missing {sorted(missing)})"
         )
-    if int(n_hashes) < int(bands) * int(rows_per_band):
-        raise ValueError(
-            f"n_hashes={n_hashes} does not cover bands*rows_per_band="
-            f"{int(bands) * int(rows_per_band)}"
-        )
     # ONE shared projection (no per-join rename): identical broadcast
     # subtrees are what lets ReusedExchange feed both joins from a
     # single delta evaluation
@@ -261,17 +245,5 @@ def incremental_band_index(
     fresh_docs = docs.join(
         churn_ids, docs[id_col] == churn_ids["_churn_id"], "left_semi"
     )
-    fresh = banded_keys(
-        minhash_signatures(
-            fresh_docs,
-            id_col,
-            text_col,
-            k=k,
-            n_hashes=n_hashes,
-            hash_mode=hash_mode,
-        ),
-        id_col,
-        bands=bands,
-        rows_per_band=rows_per_band,
-    )
+    fresh = banded_keys(minhash_signatures(fresh_docs, id_col, text_col, k), id_col)
     return kept.unionByName(fresh)

@@ -14,12 +14,13 @@ Two implementations with identical semantics:
   DuckDB-oracle shape): per (conv_id, info_type) first-seen ts, then
   the ``min_distinct``-th smallest first-seen per conversation.
 - ``escalation_alerts_stream``: ``applyInPandasWithState`` over the
-  detection stream — state = set of infoTypes seen + whether the alert
-  already fired; emits exactly one row per conversation when the
-  threshold crosses. State is keyed by conv_id, capped (≤ min_distinct
-  infoTypes), and EXPIRED by event-time timeout once a conversation
-  has been idle for the retention period — so the state store is
-  O(recently active conversations), bounded even at 10^12 turns.
+  detection stream, keyed on ``STATE_BUCKETS`` hash buckets of
+  conv_id — each bucket's state holds its conversations' seen
+  infoTypes (≤ min_distinct), fired flag and last activity; emits
+  exactly one row per conversation when the threshold crosses.
+  A conversation is EXPIRED by event time once it has been idle for
+  the retention period — so the state store is O(recently active
+  conversations), bounded even at 10^12 turns.
 """
 
 from __future__ import annotations
@@ -46,7 +47,16 @@ ALERT_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = "seen ARRAY<STRING>, fired BOOLEAN"
+#: State key count of ``escalation_alerts_stream``. A constant, not an
+#: option: the checkpointed state is keyed by bucket, so a count that
+#: changed across a restart would look conversations up in the wrong
+#: bucket.
+STATE_BUCKETS = 8
+
+_STATE_SCHEMA = (
+    "convs ARRAY<STRING>, seens ARRAY<ARRAY<STRING>>, "
+    "fireds ARRAY<BOOLEAN>, lasts ARRAY<LONG>"
+)
 
 
 def escalation_alerts_batch(
@@ -79,7 +89,6 @@ def escalation_alerts_stream(
     min_distinct: int = 3,
     watermark: str = "10 minutes",
     retention: str = "1 hour",
-    state_buckets: int | None = None,
 ) -> DataFrame:
     """Streaming twin via applyInPandasWithState with EVENT-TIME state
     expiry: a conversation's state is dropped once the watermark passes
@@ -95,81 +104,32 @@ def escalation_alerts_stream(
     ANY bounded-state design; size ``retention`` to the maximum
     plausible conversation gap.
 
-    ``state_buckets``: the per-conversation state key means one
-    Python-side group invocation (plus one state-store row write) per
-    LIVE CONVERSATION per micro-batch — measured dominant when
-    thousands of conversations interleave in every batch (the q149
-    conversation-windows lesson, ``operators/conversations.py``).
-    ``state_buckets=N`` keys the state on ``xxhash64(conv) % N``
-    instead: per batch the operator runs N invocations, each carrying
-    its bucket's ``conv -> (seen set, fired, last-activity)`` maps as
-    parallel state arrays. Output is IDENTICAL to the per-conversation
-    mode (pinned by test_cep.py): alerts, fire-once, and per-
-    conversation retention expiry all match — expiry is applied
-    per conversation inside the bucket against the SAME
-    ``last-activity + retention < watermark`` predicate the per-key
-    mode's event-time timeout uses, with the bucket's timeout
-    registered at the earliest live expiry so idle buckets still
-    evict on time."""
+    State is keyed on ``xxhash64(conv_id) % STATE_BUCKETS``, not on
+    the conversation: per micro-batch the operator runs one Python
+    invocation per bucket rather than one per live conversation (the
+    cost that dominates when thousands of conversations interleave in
+    every batch). Each bucket carries its ``conv -> (seen set, fired,
+    last activity)`` maps as parallel state arrays. Expiry is applied
+    per conversation inside the bucket (``last activity + retention <
+    watermark``), with the bucket's event-time timeout registered at
+    its earliest live expiry so idle buckets still evict on time."""
     retention_ms = _duration_ms(retention)
 
     def _fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # watermark passed last-activity + retention: drop state
-            state.remove()
-            return
-        (conv_id,) = key
-        if state.exists:
-            seen, fired = state.get
-            seen = list(seen)
-        else:
-            seen, fired = [], False
-        out = []
-        # collect (ts, info_type); sorted by event time for determinism
-        rows = []
-        for pdf in pdfs:
-            rows.extend(zip(pdf["ts"], pdf["info_type"]))
-        if not fired:
-            rows.sort(key=lambda r: (r[0], r[1]))
-            for ts, it in rows:
-                if it not in seen:
-                    seen.append(it)
-                    if len(seen) >= min_distinct:
-                        fired = True
-                        out.append((conv_id, ts, len(seen)))
-                        break
-        state.update((seen, fired))
-        if rows:
-            last_ms = max(int(ts.value) // 1_000_000 for ts, _ in rows)
-            # > watermark by construction: late rows were already dropped
-            state.setTimeoutTimestamp(last_ms + retention_ms)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["conv_id", "alert_ts", "n_info_types"]
-            )
-
-    def _fn_bucket(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
         wm = state.getCurrentWatermarkMs()
-        if state.exists or state.hasTimedOut:
-            if state.exists:
-                convs, seens, fireds, lasts = state.get
-            else:  # timed out with no surviving state row
-                convs, seens, fireds, lasts = [], [], [], []
-            seen_of = {c: list(s) for c, s in zip(convs, seens)}
-            fired_of = dict(zip(convs, fireds))
-            last_of = dict(zip(convs, lasts))
-        else:
-            seen_of, fired_of, last_of = {}, {}, {}
+        convs, seens, fireds, lasts = (
+            state.get if state.exists else ([], [], [], [])
+        )
+        seen_of = {c: list(s) for c, s in zip(convs, seens)}
+        fired_of = dict(zip(convs, fireds))
+        last_of = dict(zip(convs, lasts))
 
         def _evict(active: set) -> None:
-            # the per-key mode's event-time timeout, applied per conv:
-            # drop state once the watermark passes last + retention —
-            # except convs with data THIS batch (a keyed group with
-            # data is invoked with hasTimedOut=False and keeps state)
+            # event-time timeout per conv: drop state once the
+            # watermark passes last + retention — except convs with
+            # data THIS batch, which stay live
             for c in [
                 c
                 for c, last in last_of.items()
@@ -184,8 +144,8 @@ def escalation_alerts_stream(
             rows = []
             for pdf in pdfs:
                 rows.extend(zip(pdf["conv_id"], pdf["ts"], pdf["info_type"]))
-            # one global (conv, ts, info_type) sort gives every conv the
-            # per-key mode's (ts, info_type) event-time walk order
+            # one global (conv, ts, info_type) sort walks every conv in
+            # (ts, info_type) event-time order
             rows.sort(key=lambda r: ((r[0] is not None, r[0]), r[1], r[2]))
             active = {r[0] for r in rows}
             for conv_id, ts, it in rows:
@@ -227,31 +187,15 @@ def escalation_alerts_stream(
     d = detections
     if d.isStreaming:
         d = d.withWatermark("ts", watermark)
-    if state_buckets is None:
-        return (
-            d.groupBy("conv_id")
-            .applyInPandasWithState(
-                _fn,
-                outputStructType=ALERT_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    if state_buckets < 1:
-        raise ValueError(f"state_buckets must be >= 1, got {state_buckets}")
     return (
         d.withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(int(state_buckets)))
+            "_bkt", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(STATE_BUCKETS))
         )
         .groupBy("_bkt")
         .applyInPandasWithState(
-            _fn_bucket,
+            _fn,
             outputStructType=ALERT_SCHEMA,
-            stateStructType=(
-                "convs ARRAY<STRING>, seens ARRAY<ARRAY<STRING>>, "
-                "fireds ARRAY<BOOLEAN>, lasts ARRAY<LONG>"
-            ),
+            stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

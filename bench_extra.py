@@ -1,10 +1,9 @@
 """Round-6 optimization harness (bench.py is FROZEN; extra numbers live
 here — guide §1.4 noop-sink isolation, per-query min-of-2, fresh or
-shared session, and .explain("formatted") capture for plans/r06/).
+shared session).
 
 Usage:
     python bench_extra.py q28_stream_escalation_alerts q129_stream_dup_rate
-    python bench_extra.py --explain q39_corpus_prep        # plan only
     python bench_extra.py --all                            # every query
 
 Prints one JSON line per query: {"name": ..., "t1": ..., "t2": ...,
@@ -38,7 +37,6 @@ def _timed(fn) -> float:
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
-    explain_only = "--explain" in args
     run_all = "--all" in args
     reps = 2
     if "--reps" in args:
@@ -58,19 +56,6 @@ def main() -> None:
         _force(em.q01_tokenize_turns(spark, "/root/testdata/sf0.001"))  # warmup
         for name in names:
             q = qs[name]
-            if explain_only:
-                import contextlib
-                import io
-
-                df = q(spark, SF_DIR)
-                os.makedirs("plans/r06", exist_ok=True)
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
-                with open(f"plans/r06/{name}.txt", "w") as f:
-                    f.write(buf.getvalue())
-                print(f"wrote plans/r06/{name}.txt")
-                continue
             spark.sparkContext.setJobDescription(name)
             shots = [
                 _timed(lambda q=q: _force(q(spark, SF_DIR))) for _ in range(reps)

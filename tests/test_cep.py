@@ -2,6 +2,7 @@
 match the declarative batch plan."""
 
 import os
+import time
 
 import pandas as pd
 import pytest
@@ -77,93 +78,93 @@ def test_stream_matches_batch_single_trigger(spark, det_small, tmp_path):
     )
 
 
-def test_stream_bucketed_matches_per_key(spark, det_small, tmp_path):
-    """state_buckets mode (one invocation per bucket, conv maps as
-    parallel state arrays) must emit the identical alert set as the
-    per-conversation mode — the q28 entry relies on this equality."""
-    det_in = str(tmp_path / "in_b")
-    os.makedirs(det_in)
-    src = det_small.toPandas()
-    src["ts"] = src["ts"].astype("datetime64[us]")
-    src.to_parquet(f"{det_in}/d.parquet", index=False)
-    schema = (
-        "conv_id string, turn_idx int, info_type string, "
-        "start int, end int, token string, ts timestamp"
-    )
-    frames = {}
-    for label, buckets in (("per_key", None), ("bucketed", 3)):
-        st = spark.readStream.schema(schema).parquet(det_in)
-        alerts = cep.escalation_alerts_stream(
-            st, min_distinct=3, state_buckets=buckets
-        )
-        sink = ExactlyOnceSink(str(tmp_path / f"out_{label}"))
-        pipeline.run_to_sink(alerts, sink, str(tmp_path / f"ckpt_{label}"))
-        frames[label] = (
-            sink.read_committed(spark)
-            .orderBy("conv_id")
-            .toPandas()
-            .reset_index(drop=True)
-        )
-    assert len(frames["per_key"]) > 0
-    pd.testing.assert_frame_equal(frames["per_key"], frames["bucketed"])
-
-
-@pytest.mark.parametrize("buckets", [None, 2])
-def test_stream_state_expires_after_retention(spark, tmp_path, buckets):
+@pytest.mark.parametrize(
+    "conv, active, shared",
+    [("a", "wm", False), ("a", "c5", True)],
+    ids=["own_bucket", "shared_bucket"],
+)
+def test_stream_state_expires_after_retention(
+    spark, tmp_path, conv, active, shared
+):
     """Event-time state expiry: a conversation idle past
     last-activity + retention loses its seen-infoType set (a later
     detection starts a FRESH count), while recently-active state is
-    kept. Four micro-batch runs against one checkpoint:
+    kept. Five micro-batches in three query runs against one checkpoint:
 
-      b1: conv a sees 2 distinct infoTypes; conv wm drives watermark
-      b2/b3: only wm activity 5h later → watermark passes a's
-             (last activity + 1h) → a's state is dropped in b3
-      b4: a's 3rd distinct infoType arrives → does NOT complete the
-          stale pair (fresh count = 1, no alert)
-      b5: a gets 2 more distinct infoTypes quickly → fresh count
+      b1: conv sees 2 distinct infoTypes; active drives the watermark
+      b2/b3: only active's activity, 5h later → b3 runs under a
+             watermark past conv's last activity + 1h → conv's state
+             is dropped in b3
+      b4: conv's 3rd distinct infoType arrives → does NOT complete
+          the stale pair (fresh count = 1, no alert)
+      b5: conv gets 2 more distinct infoTypes quickly → fresh count
           reaches 3 → exactly one alert, at the b5 crossing time
           (proves b4's state was fresh AND was retained into b5)
-    """
+
+    State is keyed by conv_id hash bucket. In ``own_bucket`` conv's
+    bucket gets no data in b3 and is evicted by its timeout. In
+    ``shared_bucket`` active's rows land in conv's bucket, so conv is
+    evicted inside a bucket invocation that has data. That is why
+    b2–b4 share one run: each follows the last directly as a data
+    batch, with no no-data batch between them whose timeout would
+    evict conv first."""
+    buckets = {
+        r["c"]: r["b"]
+        for r in spark.createDataFrame([(conv,), (active,)], "c string")
+        .select("c", F.pmod(F.xxhash64("c"), F.lit(cep.STATE_BUCKETS)).alias("b"))
+        .collect()
+    }
+    assert (buckets[conv] == buckets[active]) == shared
     in_dir = str(tmp_path / "in3")
     os.makedirs(in_dir)
     sink = ExactlyOnceSink(str(tmp_path / "out3"))
     ckpt = str(tmp_path / "ckpt3")
     schema = "conv_id string, info_type string, ts timestamp"
 
-    def run_batch(name, rows):
-        pdf = pd.DataFrame(rows, columns=["conv_id", "info_type", "ts"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-        pdf.to_parquet(f"{in_dir}/{name}.parquet", index=False)
-        st = spark.readStream.schema(schema).parquet(in_dir)
+    stamp = [int(time.time())]
+
+    def run_batch(*batches):
+        # one query run; each staged file is one micro-batch, taken in
+        # modification-time order
+        for name, rows in batches:
+            pdf = pd.DataFrame(rows, columns=["conv_id", "info_type", "ts"])
+            pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
+            path = f"{in_dir}/{name}.parquet"
+            pdf.to_parquet(path, index=False)
+            stamp[0] += 1
+            os.utime(path, (stamp[0], stamp[0]))
+        st = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
         pipeline.run_to_sink(
             cep.escalation_alerts_stream(
-                st,
-                min_distinct=3,
-                watermark="10 minutes",
-                retention="1 hour",
-                state_buckets=buckets,
+                st, min_distinct=3, watermark="10 minutes", retention="1 hour"
             ),
             sink,
             ckpt,
         )
 
-    run_batch("b1", [
-        ("a", "EMAIL_ADDRESS", "2026-01-01 00:00:00"),
-        ("a", "PHONE_NUMBER", "2026-01-01 00:01:00"),
-        ("wm", "EMAIL_ADDRESS", "2026-01-01 00:00:00"),
-    ])
-    run_batch("b2", [("wm", "EMAIL_ADDRESS", "2026-01-01 05:00:00")])
-    run_batch("b3", [("wm", "EMAIL_ADDRESS", "2026-01-01 05:01:00")])
-    run_batch("b4", [("a", "US_SOCIAL_SECURITY_NUMBER", "2026-01-01 06:00:00")])
+    run_batch(("b1", [
+        (conv, "EMAIL_ADDRESS", "2026-01-01 00:00:00"),
+        (conv, "PHONE_NUMBER", "2026-01-01 00:01:00"),
+        (active, "EMAIL_ADDRESS", "2026-01-01 00:00:00"),
+    ]))
+    run_batch(
+        ("b2", [(active, "EMAIL_ADDRESS", "2026-01-01 05:00:00")]),
+        ("b3", [(active, "EMAIL_ADDRESS", "2026-01-01 05:01:00")]),
+        ("b4", [(conv, "US_SOCIAL_SECURITY_NUMBER", "2026-01-01 06:00:00")]),
+    )
     assert sink.read_committed(spark).count() == 0  # stale pair NOT completed
 
-    run_batch("b5", [
-        ("a", "EMAIL_ADDRESS", "2026-01-01 06:01:00"),
-        ("a", "PHONE_NUMBER", "2026-01-01 06:02:00"),
-    ])
+    run_batch(("b5", [
+        (conv, "EMAIL_ADDRESS", "2026-01-01 06:01:00"),
+        (conv, "PHONE_NUMBER", "2026-01-01 06:02:00"),
+    ]))
     out = sink.read_committed(spark).toPandas()
     assert len(out) == 1
-    assert out.iloc[0]["conv_id"] == "a"
+    assert out.iloc[0]["conv_id"] == conv
     assert str(out.iloc[0]["alert_ts"]) == "2026-01-01 06:02:00"
 
 

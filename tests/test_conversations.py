@@ -383,8 +383,8 @@ def test_conversation_windows_stream_carry_and_quarantine(spark, tmp_path):
             ("b", 2, "agent", "x1 x2 x3 x4", None),
             # negative preamble index is a legitimate first turn
             ("n", -1, "agent", "sys", None),
-            # NULL conv_id is a real (if degenerate) group in BOTH
-            # state modes — offsets carry across batches under it
+            # NULL conv_id is a real (if degenerate) group — offsets
+            # carry across batches under it
             (None, 1, "agent", "n1 n2", None),
         ],
         columns=_COLS,
@@ -399,7 +399,7 @@ def test_conversation_windows_stream_carry_and_quarantine(spark, tmp_path):
             (None, 2, "customer", "n3", None),
             # same-batch duplicate turn_idx with DIFFERENT payloads:
             # the (n_piece, role) content tie-break accepts the same
-            # row in both modes (shorter piece first)
+            # row whatever the arrival order (shorter piece first)
             ("d", 1, "agent", "t1 t2 t3", None),
             ("d", 1, "agent", "t1 t2", None),
         ],
@@ -416,39 +416,25 @@ def test_conversation_windows_stream_carry_and_quarantine(spark, tmp_path):
         p = f"{staged}/p{k}.parquet"
         pdf.to_parquet(p)
         os.utime(p, (t0 + k, t0 + k))
-    def run(name, **kw):
-        st = (
-            spark.readStream.schema(
-                "conv_id string, turn_idx int, role string, text string, "
-                "tool string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
+    st = (
+        spark.readStream.schema(
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string"
         )
-        wins = conversation_windows_stream(
-            st, chunk_tokens=8, stride_tokens=4, **kw
-        )
-        q = (
-            wins.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return spark.sql(f"select * from {name}").toPandas()
-
-    out = run("cw_stream")
-    # the bucketed/vectorized state mode is output-identical on the
-    # same feed — violations, NULL idx, and negative idx included
-    bucketed = run("cw_stream_b", state_buckets=3)
-    key = ["conv_id", "window_id", "turn_idx"]
-    pd.testing.assert_frame_equal(
-        out.sort_values(key, na_position="first").reset_index(drop=True),
-        bucketed.sort_values(key, na_position="first").reset_index(drop=True),
-        check_dtype=False,
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged)
     )
+    wins = conversation_windows_stream(st, chunk_tokens=8, stride_tokens=4)
+    q = (
+        wins.writeStream.format("memory")
+        .queryName("cw_stream")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_cw_stream"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    out = spark.sql("select * from cw_stream").toPandas()
     # conv a spans: [0,3),[3,5),[5,10) — turn 3 crossed the batch
     spans = {
         int(t): (int(g.tok_start.iloc[0]), int(g.tok_end.iloc[0]))
@@ -492,8 +478,6 @@ def test_conversation_windows_stream_carry_and_quarantine(spark, tmp_path):
     ).parquet(staged)
     with pytest.raises(ValueError, match="stride_tokens"):
         conversation_windows_stream(dummy, chunk_tokens=4, stride_tokens=5)
-    with pytest.raises(ValueError, match="state_buckets"):
-        conversation_windows_stream(dummy, state_buckets=0)
 
 
 def test_assemble_windows_samples(spark):

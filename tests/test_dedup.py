@@ -87,15 +87,6 @@ def test_simhash_deterministic_across_partitionings(spark, docs):
     assert [r["simhash"] for r in a] == [r["simhash"] for r in b]
 
 
-def test_xxhash64_production_mode(spark, docs):
-    """xxhash64 mode: same dup findings, native long signatures."""
-    out = {r["doc_id"]: r["dup_of"] for r in
-           dedup.minhash_dedup(docs, hash_mode="xxhash64").collect()}
-    assert out[1] == 0 and out[2] == 0 and out[3] is None
-    sig = dedup.minhash_signatures(docs, hash_mode="xxhash64").first()["sig"]
-    assert all(isinstance(x, int) for x in sig)
-
-
 def test_simhash_expr_matches_udf(spark, docs):
     """The JVM expression path (simhash_cols) must be bit-for-bit the
     vectorized-Arrow reference implementation (simhash_udf)."""
@@ -260,8 +251,8 @@ def test_near_dup_gate_accepts_and_rejects(spark, docs):
         ],
         "doc_id long, text string",
     )
-    hits = {r["id"] for r in
-            dedup.near_dup_gate(incoming, corpus_banded).collect()}
+    with dedup.NearDupGate(corpus_banded) as gate:
+        hits = {r["id"] for r in gate.apply(incoming).collect()}
     assert 100 in hits and 101 in hits and 102 not in hits
 
 

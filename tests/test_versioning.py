@@ -214,15 +214,3 @@ def test_incremental_band_index_rebands_only_churn(spark):
         map(tuple, incremental_band_index(fake, empty_delta, docs).collect())
     )
     assert got == sorted(map(tuple, fake.collect()))
-
-
-def test_incremental_band_index_rejects_short_signature(spark):
-    from auto_data_tokenize_spark.operators.versioning import (
-        incremental_band_index,
-    )
-
-    docs = _mk(spark, [(1, "a", "en")]).select("doc_id", "text")
-    idx = spark.createDataFrame([], "id long, band_idx int, band_key string")
-    delta = corpus_delta(docs, docs, ["text"])
-    with pytest.raises(ValueError, match="does not cover"):
-        incremental_band_index(idx, delta, docs, n_hashes=32)
